@@ -49,8 +49,8 @@ import graft.tick.{GroupUnit, Rollup, TickStore}
   */
 object RollupRewrite {
 
-  /** points-table location -> rollup base dir */
-  private val registry = TrieMap[String, String]()
+  /** points-table location -> the (store, db) whose rollups answer it */
+  private val registry = TrieMap[String, (TickStore, String)]()
 
   private def norm(p: String): String = new Path(p).toUri.getPath.stripSuffix("/")
 
@@ -58,7 +58,7 @@ object RollupRewrite {
     * into the session (idempotent).
     */
   def register(spark: SparkSession, store: TickStore, db: String): Unit = {
-    registry.put(norm(store.pointsLocation(db)), s"${store.root}/$db/rollup")
+    registry.put(norm(store.pointsLocation(db)), (store, db))
     val installed = spark.experimental.extraOptimizations
       .exists(_.isInstanceOf[RollupRewriteRule])
     if (!installed)
@@ -66,7 +66,7 @@ object RollupRewrite {
         spark.experimental.extraOptimizations :+ new RollupRewriteRule(spark)
   }
 
-  private[plans] def lookup(paths: Seq[Path]): Option[String] =
+  private[plans] def lookup(paths: Seq[Path]): Option[(TickStore, String)] =
     paths.headOption.flatMap(p => registry.get(norm(p.toString)))
 
   private[plans] val levels: Map[String, GroupUnit] = Map(
@@ -105,12 +105,9 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         case _ => return None
       }
     }
-    val rollupBase = relation.relation match {
+    val (store, db) = relation.relation match {
       case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-        lookup(fs.location.rootPaths) match {
-          case Some(b) => b
-          case None    => return None
-        }
+        lookup(fs.location.rootPaths).getOrElse(return None)
       case _ => return None
     }
 
@@ -136,9 +133,7 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       }
       case _ => return None
     }
-    if (!new Path(s"$rollupBase/${unit.name}").getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-        .exists(new Path(s"$rollupBase/${unit.name}"))) return None
+    if (!Rollup.levelExists(spark, store, db, unit)) return None
 
     // ---- filters: at most ONE `index = <lit>` (+ its null guard);
     // conflicting equalities (`index='a' AND index='b'`) are left to
@@ -175,7 +170,7 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
     // ---- build the replacement over the rollup table ----
-    val roll0 = spark.read.parquet(s"$rollupBase/${unit.name}")
+    val roll0 = Rollup.read(spark, store, db, unit)
     val roll1 = indexVal.map(v => roll0.where(col("index") === v)).getOrElse(roll0)
     val needed = Seq("bucket", "field") ++ outs.collect {
       case StatOut(s, _) => Seq(s)

@@ -2,8 +2,9 @@ package graft.tick
 import graft.Pinned.PinnedOps
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The materialized-rollup tier: the Spark-native analog of the
   * reference's aggregation pyramid (`node.go:39-53`: every interior
@@ -46,8 +47,9 @@ object Rollup {
       .groupBy(col("index"), GroupSpec(1, level).bucket(col("ts")).as("bucket"), col("field"))
       .agg(
         // decimal: exact + order-independent, so rollup answers equal
-        // direct aggregation bit-for-bit (and match the oracle)
-        sum(col("v").cast("decimal(20,4)")).as("sum"),
+        // direct aggregation bit-for-bit (and match the oracle); stored at
+        // the read schema's decimal(38,4), as the coarser levels are
+        sum(col("v").cast("decimal(20,4)")).cast(SumType).as("sum"),
         max(col("v")).as("max"),
         min(col("v")).as("min"),
         min(col("ts_ns")).as("first_ts_ns"),
@@ -201,47 +203,56 @@ object Rollup {
     }
   }
 
-
-  /** Stat-row schema as read back (sum widened to the max precision any
-    * level's cascaded decimal sums can reach) — used only to keep an
-    * EMPTY level directory readable; non-empty reads take the files'
-    * own schema.
+  /** Decimal type of the `sum` stat on every level: the precision the
+    * cascaded decimal sums reach (minute files written before this type
+    * was pinned hold decimal(30,4), which the parquet reader widens).
     */
-  private def emptyFrame(spark: SparkSession, level: GroupUnit): DataFrame = {
-    import org.apache.spark.sql.types._
-    val fields = Seq(
-      StructField("index", StringType), StructField("bucket", TimestampType),
-      StructField("field", StringType), StructField("sum", DecimalType(38, 4)),
-      StructField("max", DoubleType), StructField("min", DoubleType),
-      StructField("first_ts_ns", LongType), StructField("first", DoubleType),
-      StructField("last_ts_ns", LongType), StructField("last", DoubleType),
-      StructField("count", LongType)) ++
-      (if (isFine(level)) Seq(StructField("ym", StringType)) else Nil)
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(fields))
-  }
+  private val SumType = DecimalType(38, 4)
 
+  /** The read schema of every rollup level, in the column order a
+    * partitioned read yields (partition columns `index`, and `ym` on
+    * fine levels, last). Reading with it rather than inferring costs no
+    * footer job per read, and keeps `index` a STRING: inference would
+    * type numeric-looking index names as INT and merge `7` with `007`.
+    */
+  private def levelSchema(level: GroupUnit): StructType = StructType(Seq(
+    StructField("bucket", TimestampType), StructField("field", StringType),
+    StructField("sum", SumType),
+    StructField("max", DoubleType), StructField("min", DoubleType),
+    StructField("first_ts_ns", LongType), StructField("first", DoubleType),
+    StructField("last_ts_ns", LongType), StructField("last", DoubleType),
+    StructField("count", LongType), StructField("index", StringType)) ++
+    (if (isFine(level)) Seq(StructField("ym", StringType)) else Nil))
+
+  /** One rollup level as a frame with [[levelSchema]]. A level with no
+    * data files reads as an empty frame of the same schema.
+    */
   def read(spark: SparkSession, store: TickStore, db: String, level: GroupUnit): DataFrame = {
     val p = levelPath(store, db, level)
     val hasFiles = {
       val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // a level dir holding only _SUCCESS (empty db materialize, or a
-      // delete that emptied the level) must read as empty, not throw
-      // schema-inference errors that brick every later ingest/query
+      // delete that emptied the level) reads as the empty frame
       f.exists(p) && f.listStatus(p).exists(s =>
         s.isDirectory || !s.getPath.getName.startsWith("_"))
     }
     if (hasFiles)
       spark.read
+        .schema(levelSchema(level))
         .option("basePath", p.toString)
         .parquet(p.toString)
-    else emptyFrame(spark, level)
+    else
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], levelSchema(level))
   }
 
-  def exists(spark: SparkSession, store: TickStore, db: String): Boolean = {
-    val p = levelPath(store, db, levels.head)
+  /** Does `level`'s directory exist for `db`? */
+  def levelExists(spark: SparkSession, store: TickStore, db: String, level: GroupUnit): Boolean = {
+    val p = levelPath(store, db, level)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  def exists(spark: SparkSession, store: TickStore, db: String): Boolean =
+    levelExists(spark, store, db, levels.head)
 
   /** Can `q` be answered from the rollup tier? Requires: a group level
     * at or coarser than a rollup level whose buckets nest inside the
@@ -283,7 +294,6 @@ object Rollup {
     val unit = routable(q).getOrElse(
       throw new IllegalArgumentException(s"query not routable through rollups: $q"))
     val spec = q.group.get
-    val nsOf = (i: java.time.Instant) => i.getEpochSecond * 1000000000L + i.getNano
     val base = read(spark, store, db, unit)
       .where(col("index") === q.index)
     val ranged = Seq(
@@ -291,37 +301,28 @@ object Rollup {
       q.to.map(i => col("bucket") < lit(java.sql.Timestamp.from(i)))
     ).flatten.foldLeft(base)(_ where _)
 
-    // re-bucket (multiplier > 1 merges several rollup buckets into one)
-    val rebucketed = ranged.withColumn("qbucket", spec.bucket(col("bucket")))
-    val perField = rebucketed.groupBy(col("qbucket"), col("field"))
-      .agg(
-        sum(col("sum")).as("sum"),
-        max(col("max")).as("max"),
-        min(col("min")).as("min"),
-        min_by(col("first"), col("first_ts_ns")).as("first"),
-        max_by(col("last"), col("last_ts_ns")).as("last"),
-        sum(col("count")).as("count"))
-
-    // perField holds exactly one row per (qbucket, field): picking a
-    // field's merged stat is a single-non-null max(when(...))
+    // one aggregation over the query bucket: each requested field's stat
+    // is merged from that field's rows only (`when` nulls the others;
+    // min_by/max_by skip rows whose ordering is null)
     val aggCols: Seq[Column] = q.fields.map { case (f, red) =>
-      def pick(stat: String): Column = max(when(col("field") === f, col(stat)))
+      def of(stat: String): Column = when(col("field") === f, col(stat))
       val c = red match {
-        case "sum"        => pick("sum").cast("double")
-        case "max"        => pick("max")
-        case "min"        => pick("min")
-        case "first"      => pick("first")
-        case "last"       => pick("last")
+        case "sum"        => sum(of("sum")).cast("double")
+        case "max"        => max(of("max"))
+        case "min"        => min(of("min"))
+        case "first"      => min_by(col("first"), of("first_ts_ns"))
+        case "last"       => max_by(col("last"), of("last_ts_ns"))
         // coalesce: count of a field absent from the bucket is 0 on the
         // raw path (count over all-null) and must stay 0 when routed
-        case "count"      => coalesce(pick("count"), lit(0L))
-        case "avg" | "ma" => pick("sum").cast("double") / pick("count")
+        case "count"      => coalesce(sum(of("count")), lit(0L))
+        case "avg" | "ma" => sum(of("sum")).cast("double") / sum(of("count"))
         case other => throw new IllegalArgumentException(s"unknown reducer: '$other'")
       }
       c.as(TickQueryExec.outName(f, red))
     }
-    perField
-      .groupBy(col("qbucket").as("bucket"))
+    ranged
+      // re-bucket (multiplier > 1 merges several rollup buckets into one)
+      .groupBy(spec.bucket(col("bucket")).as("bucket"))
       .agg(aggCols.head, aggCols.tail: _*)
       .orderBy("bucket")
   }

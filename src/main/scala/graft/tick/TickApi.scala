@@ -106,19 +106,20 @@ object TickApi {
   /** POST /{db}/_query (A8) — returns the reference's `[]Point` JSON:
     * `[{"Timestamp": <bucket ns>, "Value": {field: reduced}}]`.
     *
-    * Driver memory is BOUNDED: rows stream through `toLocalIterator`
-    * (one partition resident at a time, order preserved — the query
-    * result is sorted) straight into a Jackson streaming generator, so
-    * neither the full Row array nor a full JSON tree ever
-    * materializes; peak footprint is one partition + the rendered
-    * string. A result past `maxRows` throws [[ResultTooLargeException]]
-    * (HTTP 413) instead of exhausting the driver — the reference
-    * materializes unboundedly here (`handlers.go` marshals the whole
-    * `[]Point`), which is the one behavior of its daemon NOT worth
-    * wire parity at scale.
+    * Driver memory is BOUNDED by the cap: the query result is sorted,
+    * so `limit(maxRows + 1)` plans as a top-K (`TakeOrderedAndProject`)
+    * and one collect fetches it — each partition sends at most
+    * `maxRows + 1` rows, merged on arrival into one queue of that size.
+    * The rows render through a Jackson streaming generator, so no JSON
+    * tree materializes. A result past `maxRows` throws
+    * [[ResultTooLargeException]] (HTTP 413) instead of exhausting the
+    * driver — the reference materializes unboundedly here
+    * (`handlers.go` marshals the whole `[]Point`), which is the one
+    * behavior of its daemon NOT worth wire parity at scale.
     */
   def query(spark: SparkSession, store: TickStore, db: String, json: String,
       maxRows: Int = DefaultMaxRows): String = {
+    require(maxRows >= 0, s"maxRows must be >= 0, got $maxRows")
     val q = TickQuery.fromJson(json)
     val df = store.query(spark, db, q)
     // column 0 is the bucket (grouped) or point ts (raw); requested
@@ -126,14 +127,13 @@ object TickApi {
     // raw queries append the exact ns key as a trailing ts_ns column —
     // use it, or two ns-distinct points would render the same µs key
     val tsNsIdx = df.columns.indexOf("ts_ns")
+    // one row past the cap tells "exactly maxRows" from "too many"
+    val rows = df.limit(if (maxRows == Int.MaxValue) maxRows else maxRows + 1).collect()
+    if (rows.length > maxRows) throw new ResultTooLargeException(maxRows)
     val sw = new java.io.StringWriter()
     val gen = mapper.getFactory.createGenerator(sw)
     gen.writeStartArray()
-    val it = df.toLocalIterator()
-    var n = 0
-    while (it.hasNext) {
-      if (n >= maxRows) { gen.close(); throw new ResultTooLargeException(maxRows) }
-      val row = it.next()
+    rows.foreach { row =>
       val ns =
         if (tsNsIdx >= 0) row.getLong(tsNsIdx)
         else TickQuery.instantNs(row.getTimestamp(0).toInstant)
@@ -147,7 +147,6 @@ object TickApi {
       }
       gen.writeEndObject()
       gen.writeEndObject()
-      n += 1
     }
     gen.writeEndArray()
     gen.close()

@@ -35,6 +35,13 @@ import org.apache.spark.sql.SparkSession
   *    body falls into the missing-from/to branch, 500 `Time 'to'
   *    Error` (`handlers.go:141-164`); unparseable from/to times render
   *    500 `Time 'from' Error` / `Time 'to' Error` (`handlers.go:146,153`).
+  *  - responses go out without Nagle delay, as Go's `net/http` sends
+  *    them (Go sets TCP_NODELAY on every connection). The JDK server
+  *    writes headers and body as separate segments, and with Nagle on
+  *    the body waits ~40 ms for the client's delayed ACK. The server
+  *    sets the JDK's `sun.net.httpserver.nodelay` property to `true`
+  *    unless it is already set; the JDK reads that property once per
+  *    JVM, when its first server is created.
   */
 final class TickHttpServer(spark: SparkSession, store: TickStore, port: Int = 0,
     maxQueryRows: Int = TickApi.DefaultMaxRows) {
@@ -122,15 +129,19 @@ final class TickHttpServer(spark: SparkSession, store: TickStore, port: Int = 0,
     })
   )
 
+  // TCP_NODELAY on the server's sockets (parity note above)
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
   server.createContext("/", (ex: HttpExchange) => handle(ex))
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+  server.setExecutor(pool)
 
   /** Bound port (useful with port=0 for tests). */
   def boundPort: Int = server.getAddress.getPort
 
   def start(): Int = { server.start(); boundPort }
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = { server.stop(0); pool.shutdown() }
 
   private def handle(ex: HttpExchange): Unit =
     try {

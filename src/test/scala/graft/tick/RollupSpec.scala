@@ -117,4 +117,40 @@ class RollupSpec extends SparkSpec {
     assert(rolled.map(r => (r.getTimestamp(0), r.get(1))).toSeq ==
       direct.map(r => (r.getTimestamp(0), r.get(1))).toSeq)
   }
+
+  test("numeric-looking index names stay distinct strings on the rollup tier") {
+    val root = s"${sys.props("java.io.tmpdir")}/graft_test_rollup_numeric"
+    val p = new org.apache.hadoop.fs.Path(root)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val s = new TickStore(root)
+    s.createDb(spark, "db")
+    s.ingestRecords(spark, "db", Seq(
+      TickIngestRecord("7", "2024-03-01T10:00:00Z", Map("v" -> 100.0)),
+      TickIngestRecord("007", "2024-03-01T10:00:00Z", Map("v" -> 1.0))))
+    Rollup.materialize(spark, s, "db")
+    Rollup.levels.foreach { level =>
+      assert(Rollup.read(spark, s, "db", level).schema("index").dataType ==
+        org.apache.spark.sql.types.StringType)
+    }
+    val query = q("""{"index":"7","group":"day","fields":{"v":{"reducer":"sum"}}}""")
+    def routedSum = s.query(spark, "db", query).collect().map(_.getDouble(1)).toSeq
+    def rawSum = s.query(spark, "db", query, exact = true, useRollups = false)
+      .collect().map(_.getDouble(1)).toSeq
+    assert(routedSum == Seq(100.0) && rawSum == Seq(100.0))
+
+    // the refresh after an ingest reads the rollups back by index name
+    s.ingestRecords(spark, "db", Seq(
+      TickIngestRecord("7", "2024-03-01T11:00:00Z", Map("v" -> 10.0))))
+    assert(routedSum == Seq(110.0) && rawSum == Seq(110.0))
+
+    // the SQL rewrite reads the same rollups
+    graft.plans.RollupRewrite.register(spark, s, "db")
+    s.read(spark, "db").createOrReplaceTempView("numeric_pts")
+    val sqlSum = spark.sql(
+      """SELECT date_trunc('day', ts) AS b, sum(value['v']) AS s
+        |FROM numeric_pts WHERE index = '7' GROUP BY 1""".stripMargin)
+    assert(sqlSum.queryExecution.executedPlan.collectLeaves().map(_.toString)
+      .mkString.contains("rollup/day"))
+    assert(sqlSum.collect().map(_.getDouble(1)).toSeq == Seq(110.0))
+  }
 }

@@ -23,8 +23,12 @@ class TickHttpSpec extends SparkSpec {
     p
   }
 
-  private def http(method: String, path: String, body: Option[String] = None): (Int, String) = {
-    val conn = new java.net.URL(s"http://127.0.0.1:$port$path")
+  private def http(method: String, path: String, body: Option[String] = None): (Int, String) =
+    httpAt(port, method, path, body)
+
+  private def httpAt(serverPort: Int, method: String, path: String,
+      body: Option[String]): (Int, String) = {
+    val conn = new java.net.URL(s"http://127.0.0.1:$serverPort$path")
       .openConnection().asInstanceOf[java.net.HttpURLConnection]
     conn.setRequestMethod(method)
     body.foreach { b =>
@@ -138,6 +142,42 @@ class TickHttpSpec extends SparkSpec {
       assert(okBody.startsWith("""[{"Timestamp":"""), okBody)
       assert("\"Timestamp\"".r.findAllIn(okBody).length == 5, okBody)
     } finally capped.stop()
+  }
+
+  test("row cap boundary: exactly maxQueryRows rows is 200, one more is 413") {
+    val root = s"${sys.props("java.io.tmpdir")}/graft_test_http_boundary"
+    val rp = new org.apache.hadoop.fs.Path(root)
+    rp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rp, true)
+    val bStore = new TickStore(root)
+    val server = new TickHttpServer(spark, bStore, port = 0, maxQueryRows = 5)
+    val bport = server.start()
+    try {
+      def post(path: String, body: String) = httpAt(bport, "POST", path, Some(body))
+      bStore.createDb(spark, "bdb")
+      // one point per minute, 21:24 .. 21:29, v = 0 .. 5
+      val points = (0 until 6).map(i =>
+        s"""{"index":"i1", "time":"2016-08-28T21:${24 + i}:00Z", "value":{"v": $i.0}}""")
+      assert(post("/bdb", points.mkString("[", ",", "]"))._1 == 200)
+      val five = (0 until 5).map(i =>
+        s"""{"Timestamp":${(1472419440L + 60L * i) * 1000000000L},"Value":{"v":$i.0}}""")
+        .mkString("[", ",", "]")
+      def query(group: String, toMinute: Int): (Int, String) = post("/bdb/_query",
+        s"""{"index": "i1", "from":"2016-08-28T21:24:00Z",
+           |"to":"2016-08-28T21:$toMinute:00Z", $group
+           |"fields":{"v": {"reducer":"avg"}}}""".stripMargin)
+      def check(group: String): Unit = {
+        assert(query(group, 29) == (200, five), s"5 rows, $group")
+        val (status, body) = query(group, 30)
+        assert(status == 413 && body.contains("result_too_large"), s"6 rows, $group: $body")
+      }
+      check("")                     // raw scan
+      check(""""group": "minute",""") // raw grouped
+      Rollup.materialize(spark, bStore, "bdb")
+      assert(Rollup.routable(TickQuery.fromJson(
+        """{"index":"i1","from":"2016-08-28T21:24:00Z","to":"2016-08-28T21:30:00Z",
+          |"group":"minute","fields":{"v":{"reducer":"avg"}}}""".stripMargin)).isDefined)
+      check(""""group": "minute",""") // rollup-routed
+    } finally server.stop()
   }
 
   test("malformed bodies follow the reference's ignore-unmarshal-errors paths") {
