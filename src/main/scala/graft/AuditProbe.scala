@@ -1,24 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Debug runner for ExplainAudit.planWarnings on named queries:
-  * prints the pre-AQE physical plan tree classes and the warnings.
+/** Runner for the [[ExplainAudit]] plan auditor.
+  *
+  * Usage: runMain graft.AuditProbe --all | <query...>
+  *
+  * `<query...>` prints, per named query, the formatted pre-AQE physical
+  * plan, the reviewed-broadcast notes, and the warnings of both nets;
+  * a query with structural warnings also gets the hinted broadcast
+  * sides and unpartitioned window children that tripped them. `--all`
+  * sweeps the structural net over every registered query. Data comes
+  * from SPARK_GRAFT_SF_DIR (default sf0.001).
   */
 object AuditProbe {
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: AuditProbe --all | <query...>")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // --all: sweep the structural net over EVERY registered query
-    // (r17 — the ExplainAudit main audits a curated 73; this mode
-    // proves the whole surface clean, allowlists applied per name)
+    // (r17 — proves the whole surface clean, allowlists applied per name)
     if (args.toSeq == Seq("--all")) {
       var bad = 0
       SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
@@ -45,15 +44,18 @@ object AuditProbe {
       spark.stop()
       return
     }
-    val names = if (args.nonEmpty) args.toSeq
-      else Seq("dedup_semantic_scaled", "dedup_semantic_lloyd",
-        "feat_quantile_bin", "q5_join", "sim_ivf_incremental")
-    names.foreach { name =>
+    args.foreach { name =>
       println(s"\n======== $name ========")
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val ws = ExplainAudit.planWarnings(df)
-      println(if (ws.isEmpty) "WARNINGS: none" else ws.mkString("WARNINGS:\n  ", "\n  ", ""))
-      if (ws.nonEmpty) {
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      println(plan)
+      val (structural, allowlisted) = ExplainAudit.planWarningsDetail(df, Some(name))
+      allowlisted.foreach(n => println(s"-- $n"))
+      val warnings = ExplainAudit.stringWarnings(plan) ++ structural
+      println(if (warnings.isEmpty) "WARNINGS: none"
+        else warnings.mkString("WARNINGS:\n  ", "\n  ", ""))
+      if (structural.nonEmpty) {
         import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join => LJoin}
         df.queryExecution.optimizedPlan.foreach {
           case j: LJoin =>

@@ -1,28 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every contract query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
   * A full warm-up lap runs first so the timed lap measures plan
-  * execution, not JVM/codegen warm-up: profiling (BenchProfile) showed
-  * identical queries cost ~10s during the first minute of a fresh JVM
-  * and ~0.3-1s at steady state — on a long-lived cluster the
-  * steady-state number is the honest one.
+  * execution, not JVM/codegen warm-up: identical queries cost ~10s
+  * during the first minute of a fresh JVM and ~0.3-1s at steady state
+  * (compare `lap1_queries` with `queries`) — on a long-lived cluster
+  * the steady-state number is the honest one.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // GRAFT_BENCH_ONLY=a,b,c restricts the lap to named queries — for
     // targeted variance experiments; the driver's official run never
     // sets it (an unset var is the full surface)
@@ -33,14 +23,13 @@ object Bench {
     // store-building entries split fixture construction from the
     // measured query: setups run (and are timed) ONCE here, so both
     // laps below time query plans — a regression in a store read can
-    // no longer hide inside rebuild noise, and vice versa
-    val setups = SparkEntry.benchSetups.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir) catch { case e: Throwable =>
-        System.err.println(s"[bench] setup $name failed: ${e.getMessage}")
-      }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    // no longer hide inside rebuild noise, and vice versa. A failed
+    // setup is a failure of the run: its query would otherwise rebuild
+    // the fixture inside the timed laps
+    val failed = scala.collection.mutable.ListBuffer.empty[String]
+    val setupRuns = Harness.runSetups(spark, sfDir, SparkEntry.benchSetups)
+    failed ++= setupRuns.collect { case r if r.failure.isDefined => s"setup:${r.name}" }
+    val setups = setupRuns.map(r => r.name -> r.seconds)
     // noop sink: forces evaluation of EVERY output column (a bare
     // count() lets the optimizer prune projection-only work away and
     // times a fiction). After each query, drop every persistent RDD
@@ -59,7 +48,6 @@ object Bench {
       RddHygiene.sweptAfter(spark) {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
     def lap(recordFailures: Boolean): Seq[(String, Double)] = queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
       try exec(fn) catch { case e: Throwable =>
@@ -105,7 +93,7 @@ object Bench {
     val partial = only.nonEmpty || singleLap
     val heapMb = Runtime.getRuntime.maxMemory() / (1024L * 1024L)
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(results)},"failed":$failedJson,"sf":"$sfDir","lap1_total":$coldTotal,"lap1_queries":${json(cold)},"min_total":$minTotal,"min_queries":${json(minLap)},"setup_total":$setupTotal,"setup_sec":${json(setups)},"partial":$partial,"laps":${if (singleLap) 1 else 2},"cpus":"$cpus","heap_max_mb":$heapMb}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(results)},"failed":$failedJson,"sf":"$sfDir","lap1_total":$coldTotal,"lap1_queries":${json(cold)},"min_total":$minTotal,"min_queries":${json(minLap)},"setup_total":$setupTotal,"setup_sec":${json(setups)},"partial":$partial,"laps":${if (singleLap) 1 else 2},"cpus":"${Harness.cpus}","heap_max_mb":$heapMb}"""
     // r19 measurement-contract fix (OPTIMIZATION_r19.md §bench-line):
     // at 357 queries the full line above is ~25 KB — four per-query
     // maps — and a launcher that keeps only a bounded tail of stdout
@@ -115,15 +103,18 @@ object Bench {
     // well under any sane tail window); the complete per-query line
     // is still printed (first) and persisted in BENCH_LAST.json.
     val shortLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","failed":$failedJson,"sf":"$sfDir","lap1_total":$coldTotal,"min_total":$minTotal,"setup_total":$setupTotal,"partial":$partial,"laps":${if (singleLap) 1 else 2},"cpus":"$cpus","heap_max_mb":$heapMb,"n_queries":${results.size},"queries_file":"BENCH_LAST.json"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","failed":$failedJson,"sf":"$sfDir","lap1_total":$coldTotal,"min_total":$minTotal,"setup_total":$setupTotal,"partial":$partial,"laps":${if (singleLap) 1 else 2},"cpus":"${Harness.cpus}","heap_max_mb":$heapMb,"n_queries":${results.size},"queries_file":"BENCH_LAST.json"}"""
     // stop FIRST so the JSON is this process's final stdout output (a
     // launcher that reads the tail shouldn't trip over shutdown noise),
-    // and drop a file copy as a parse-proof fallback
+    // and drop file copies as a parse-proof fallback: a launcher such
+    // as sbt still prints its own lines after the process's last one
     spark.stop()
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_LAST.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    Seq("BENCH_LAST.json" -> line, "BENCH_SUMMARY.json" -> shortLine).foreach {
+      case (file, text) =>
+        try java.nio.file.Files.write(
+          java.nio.file.Paths.get(file), (text + "\n").getBytes("UTF-8"))
+        catch { case _: Throwable => () }
+    }
     println(line)
     println(shortLine)
   }

@@ -1,17 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** Plan auditor: prints formatted physical plans for representative
-  * queries and flags the shapes that break at 100 TB — run after
-  * operator changes to keep the plans the ones we want at scale.
+/** Plan auditor library: flags the plan shapes that break at 100 TB.
+  * [[AuditProbe]] runs it over named queries or the whole surface —
+  * run that after operator changes to keep the plans the ones we want
+  * at scale; PlanSpec runs the structural net in the suite.
   *
   * Two nets (r15 — the r14 verdict's item 3; the old net checked only
   * `PushedFilters: []` and `CartesianProduct`, which let an
   * unpartitioned seed-selection window sail through "zero warnings"):
   *
-  *  1. STRING net on the formatted plan: missing scan pushdown,
-  *     cartesian products (unchanged from r1).
+  *  1. STRING net on the formatted plan ([[stringWarnings]]):
+  *     missing scan pushdown, cartesian products (unchanged from r1).
   *  2. STRUCTURAL net ([[planWarnings]]): an unpartitioned
   *     `Window`/`WindowGroupLimit` whose input is not
   *     aggregate-collapsed (= a single-partition sort / single-node
@@ -321,8 +322,8 @@ object ExplainAudit {
     *
     * A tripwire, not a prover: it can miss semantically-bounded
     * shapes it has no rule for (false negatives acceptable; false
-    * positives on the audited queries are not). Shared by the audit
-    * main and PlanSpec so the suite fails on the same net.
+    * positives on the audited queries are not). Shared by AuditProbe
+    * and PlanSpec so the suite fails on the same net.
     */
   def planWarnings(df: DataFrame): Seq[String] = planWarnings(df, None)
 
@@ -381,105 +382,9 @@ object ExplainAudit {
     (windows ++ hinted, notes)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val interesting = Seq(
-      "tick_avg_2min",     // predicate pushdown into the events scan
-      "q1_agg",            // partial+final agg, scan pruning to 7 cols
-      "q5_join",           // broadcast dims vs shuffle join
-      "tick_point_lookup", // exact-key scan
-      "rollup_query_hour", // routed rollup read
-      "sim_bruteforce_topk", // broadcast NL join + window topk
-      "agg_percentiles",   // histogram-refinement ranks (no data shuffle)
-      "tick_gap_fill",     // broadcast axis join, window only on the axis
-      "text_tfidf",        // two-stage partial agg + broadcast scalar
-      "pivot_agg",         // single-pass conditional agg (no values scan)
-      "sample_hash",       // digest filter evaluated at the scan
-      "window_range_frame", // range-frame window, one shuffle
-      "decontaminate_ngram", // broadcast benchmark shingles, streaming train side
-      "text_repetition",   // one (doc, bigram) shuffle, partial agg
-      "join_bloom_prune",  // bloom probe ON the fact scan, pre-shuffle
-      "topk_per_group",    // rank window over pre-aggregated rows only
-      "events_transitions", // one user-partitioned window, tiny agg
-      "text_inverted_index", // explode + single partial-agg term shuffle
-      "graph_pagerank",    // per-round node-keyed join + partial agg
-      "skyline_pareto",    // range-partitioned local prune -> tiny global
-      "text_bm25",         // one tf pass, broadcast stats, topk
-      "vec_centroids",     // posexplode + (label,dim) partial agg
-      "sample_temperature", // broadcast alloc, one per-domain window
-      "anomaly_mad",       // broadcast med/mad, filter at scan side
-      "store_scd2",        // CDF union + one (key)-partitioned lead window
-      "store_incremental_join", // stored MV union + broadcast-dim delta join
-      "dedup_prefix_filter", // df agg + per-doc rank + signature equi-join
-      "events_pattern_match", // user-keyed joins w/ bounded time residuals
-      "tick_rolling_corr", // pair-partitioned rolling window, exact moments
-      "stat_chi2",         // broadcast marginals grid, tiny aggregates
-      "q10_join",          // agg-before-dim-join order, broadcast nation
-      "stat_benford",      // one map-side-combinable digit count
-      "stat_mannwhitney",  // distinct-value cumsum, single tiny window
-      "stat_theil_sen",    // collapse-then-pair: days^2, broadcast self-join
-      "tick_bollinger",    // one shared window sort carrying 3 running sums
-      "feat_target_encode", // broadcast category stats, fact never shuffles
-      "feat_quantile_bin", // two-phase prefix sum: bucketed window, no global sort
-      "feat_drift_psi",    // 10-row interval relation broadcast onto the fact
-      "graph_common_neighbors", // wedge self-join reuses the c-keyed exchange
-      "graph_hits",        // per-half-round state join + 1-row normalizer
-      "graph_kcore",       // per-round degree count + survivor semi-joins
-      "graph_coreness",    // per-round state join + per-node h-index window
-      "sim_hybrid_search", // BM25 pass + broadcast query vector + rank fusion
-      "events_bot_detection", // per-user lag window, whole-second moments
-      "sample_negatives",  // batch x catalog grid, interaction anti-join
-      "streaming_join_outer", // watermark-bounded outer state (batch explain)
-      "q6_agg",            // all predicates pushed, 4-col ReadSchema
-      "q17_subquery",      // decorrelated per-part AVG, brand pushed to part
-      "q18_join",          // aggregate-before-join, 2-col fact scan
-      "graph_clustering_coeff", // oriented wedges + corner explode, no self-join
-      "graph_ppr",         // per-round state join + seed-row union
-      "vec_pca_power",     // one n*d^2 co-moment shuffle, broadcast iterations
-      "text_kneser_ney",   // one adjacency window + bigram-keyed partial aggs
-      "stat_bootstrap_ci", // map-local x50 explode, partial-agged resample means
-      "store_delete_vectors", // snapshot scan + ONE broadcast DV anti-join
-      "text_levenshtein_pairs", // signature-tier candidates, banded DP verify
-      "text_quality_classifier", // per-round stats agg + broadcast 1-row betas
-      "dedup_span_removal", // span-keyed dup agg + (doc,pos) anti-join rebuild
-      "text_dsir",         // 256-bucket stats + broadcast log-ratio model
-      "dedup_semantic",    // broadcast centroid argmin + cluster-keyed pairs
-      "decontaminate_embedding", // broadcast bench set, one corpus scan
-      "graph_label_propagation", // kNN-sparsify window + per-round vote agg
-      "sim_ivf_incremental", // frozen-centroid append assign + probed exact re-rank
-      "dedup_semantic_scaled", // r14: broadcast exemplar seeds, partial argmin, cluster pairs
-      "sim_pq_incremental",  // r14: frozen-codebook encode fold + ADC over grown codes
-      "mm_dedup_phash",      // r14: band-bucket join + broadcast Hamming verify
-      "dedup_semantic_lloyd", // r14: two broadcast argmin phases + one mean agg
-      "dedup_semantic_hier", // r15: √nlist routers, probed-cell argmin, unhinted cell join
-      "dedup_semantic_lloyd_hier", // r16: BOTH Lloyd argmin passes router-probed
-      "graph_triangles_shuffled", // r17: zero-broadcast-hint triangle tier
-      "graph_clustering_shuffled") // r17: zero-broadcast-hint clustering tier
-
-    interesting.foreach { name =>
-      println(s"\n======== $name ========")
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      println(plan)
-      val (structural, allowlisted) = planWarningsDetail(df, Some(name))
-      val warnings = Seq(
-        ("PushedFilters: []", "scan has NO pushed filters"),
-        ("CartesianProduct", "cartesian product in plan"))
-        .collect { case (needle, msg) if plan.contains(needle) => msg } ++
-        structural
-      allowlisted.foreach(n => println(s"-- $n"))
-      if (warnings.nonEmpty) println(s"!! ${warnings.mkString("; ")}")
-    }
-    spark.stop()
-  }
+  /** The string net over a formatted (`FormattedMode`) plan. */
+  def stringWarnings(formattedPlan: String): Seq[String] = Seq(
+    "PushedFilters: []" -> "scan has NO pushed filters",
+    "CartesianProduct" -> "cartesian product in plan")
+    .collect { case (needle, msg) if formattedPlan.contains(needle) => msg }
 }

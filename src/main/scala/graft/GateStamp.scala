@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Gen-slice stamp runner for streaming gates and other evidence-
   * bearing queries (r16 — the r15 verdict's items 5 and 7): runs named
   * queries against an explicit data dir, 3 laps each, and prints BOTH
@@ -26,26 +24,13 @@ object GateStamp {
     require(unknown.isEmpty,
       s"unknown queries: ${unknown.mkString(", ")} — known names are " +
         s"SparkEntry.queries keys (${SparkEntry.queries.size} registered)")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.benchSetups.filter { case (n, _) => names.contains(n) }
-      .toSeq.sortBy(_._1).foreach { case (n, fn) =>
-        // setups are timed and printed: for fixture-building gates
-        // (e.g. the versioned-ingest streaming drain) the setup IS the
-        // scaling evidence — a cold-cell run shows the build wall, a
-        // re-run shows the fixture cache hit
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, dir)
-          println(f"$n setup: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        } catch { case e: Throwable =>
-          System.err.println(s"[gatestamp] setup $n failed: ${e.getMessage}")
-        }
-      }
+    val spark = Harness.session()
+    // setups are timed and printed: for fixture-building gates (e.g.
+    // the versioned-ingest streaming drain) the setup IS the scaling
+    // evidence — a cold-cell run shows the build wall, a re-run shows
+    // the fixture cache hit
+    Harness.runSetups(spark, dir, SparkEntry.benchSetups.filter { case (n, _) => names.contains(n) })
+      .foreach(r => if (r.failure.isEmpty) println(f"${r.name} setup: ${r.seconds}%.2f s"))
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       var evidence = ""

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthetic hot-relation generator for the SCALING-CURVE measurement
@@ -85,11 +84,7 @@ object ScaleGen {
         asked
       case None => _ => true
     }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val nCust = (150000 * sf).toLong.max(1)
     val nSupp = (10000 * sf).toLong.max(1)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Warm per-query timing at the driver's bench config: each named
   * query runs 3 laps in ONE session (run1 = cold/JIT — trust run2/3).
@@ -8,12 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     // one data dir for BOTH the setup loop and the laps: a divergence
     // would make the setups build index caches for a different corpus
     // than the laps time (semanticHash key misses -> per-probe rebuild)
@@ -21,12 +15,7 @@ object TimeOne {
     // queries with registered fixtures (cached index artifacts, store
     // builds) get them ONCE up front, exactly like the official bench,
     // so laps time the query path rather than fixture construction
-    SparkEntry.benchSetups.filter { case (n, _) => args.contains(n) }
-      .toSeq.sortBy(_._1).foreach { case (n, fn) =>
-        try fn(spark, sfDir) catch { case e: Throwable =>
-          System.err.println(s"[timeone] setup $n failed: ${e.getMessage}")
-        }
-      }
+    Harness.runSetups(spark, sfDir, SparkEntry.benchSetups.filter { case (n, _) => args.contains(n) })
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
       val laps = (1 to 3).map { i =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -21,27 +20,15 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // run registered fixtures up front, exactly like Bench/TimeOne:
     // lazily-built caches (the IVF index) must PREDATE the per-query
     // hygiene sweeps or the sweep unpersists their blocks while the
     // cache registry keeps the entry — later hits would silently serve
     // a storageLevel-NONE DataFrame and recompute per probe
-    SparkEntry.benchSetups
-      .filter { case (n, _) => only.isEmpty || only(n) }
-      .toSeq.sortBy(_._1).foreach { case (n, fn) =>
-        try fn(spark, sfDir) catch { case e: Throwable =>
-          System.err.println(s"[verify] setup $n failed: ${e.getMessage}")
-        }
-      }
+    Harness.runSetups(spark, sfDir,
+      SparkEntry.benchSetups.filter { case (n, _) => only.isEmpty || only(n) })
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>

@@ -36,16 +36,7 @@ object MmQueries {
     * corpus-sized path).
     */
   private[mm] def phashDedupAt(s: org.apache.spark.sql.SparkSession, d: String,
-      nBands: Int, tier: graft.StaticTier): org.apache.spark.sql.DataFrame =
-    phashParts(s, d, nBands, tier)._2
-
-  /** (candidate pairs, final result) at a band geometry — the pair
-    * relation is exposed so MmBandProbe can measure the candidate
-    * count per geometry (the r17 gen10 growth evidence).
-    */
-  private[mm] def phashParts(s: org.apache.spark.sql.SparkSession, d: String,
-      nBands: Int, tier: graft.StaticTier)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      nBands: Int, tier: graft.StaticTier): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
     val media = Multimodal.withPpmMedia(docs)
@@ -77,7 +68,7 @@ object MmQueries {
     val hamming = bandIdx
       .map(i => bit_count(col(s"a$i").bitwiseXOR(col(s"c$i"))))
       .reduce(_ + _)
-    (pairs, pairs.join(graft.StaticTier.side(hx, tier), "a_id")
+    pairs.join(graft.StaticTier.side(hx, tier), "a_id")
       .join(graft.StaticTier.side(hy, tier), "b_id")
       .withColumn("hamming", hamming.cast("long"))
       .where(col("hamming") <= 8)
@@ -86,7 +77,7 @@ object MmQueries {
         min("hamming").as("min_hamming"))
       .select(col("b_id").as("dropped_id"), col("keep_id"),
         col("n_near"), col("min_hamming"))
-      .orderBy("dropped_id"))
+      .orderBy("dropped_id")
   }
 
   /** DuckDB oracle for [[phashDedupAt]] at the same band geometry:

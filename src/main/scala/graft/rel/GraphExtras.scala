@@ -317,10 +317,12 @@ object GraphExtras {
   /** Personalized PageRank over undirected edges `(a, b)` (both
     * orientations present): `rounds` diffusion steps of 1e-12 integer
     * walk mass from `seed`, damping 85/100 with truncating division.
-    * The restart mass re-enters via a UNION of one constant row (not
-    * a join), so each round is one state join onto the pinned edge
-    * list + one partial-aggregated groupBy; unreached nodes stay
-    * absent rather than zero. Broadcast and CoPartitioned tiers are
+    * The restart mass is added in the contribution aggregate's result
+    * projection, and a sentinel edge `-1 → seed` keeps the seed's group
+    * present in every round, so each round is one state join onto the
+    * pinned edge list + one partial-aggregated groupBy, with no union
+    * or re-aggregate; unreached nodes stay absent rather than zero.
+    * Broadcast and CoPartitioned tiers are
     * hash-identical (pinned in R8bWaveSpec) — the same two-tier
     * posture as [[PageRank.run]].
     */

@@ -5,20 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for suites (one per JVM; sbt forks once). */
 object SparkSpecBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.start(Harness.builder(8)
+    .appName("graft-test")
+    .config("spark.sql.warehouse.dir",
+      s"${sys.props("java.io.tmpdir")}/graft_warehouse"))
 }
 
 abstract class SparkSpec extends AnyFunSuite {

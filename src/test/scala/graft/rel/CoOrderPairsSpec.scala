@@ -112,10 +112,11 @@ class CoOrderPairsSpec extends SparkSpec {
       s"eval path: expected the packed_pairs range-contract error, got: ${rootMessages(badEval)}")
   }
 
-  test("basket_lift int-coded packed pairs == the string-HOF spelling (sf0.001)") {
-    // r19: brands int-coded at the part scan so the pair fan-out rides
-    // the codegen'd packed_pairs path — pinned row-exact against the
-    // r18 string/HOF formulation (which this reference reproduces)
+  test("basket_lift packed index pairs == the string-HOF spelling (sf0.001)") {
+    // r19: the pair fan-out packs INDEX pairs over each sorted brand set
+    // so it rides the codegen'd packed_pairs path — pinned row-exact
+    // against the r18 string/HOF formulation (which this reference
+    // reproduces)
     val d = sf0001
     val bs = Tables.lineitem(spark, d)
       .join(Tables.part(spark, d), col("l_partkey") === col("p_partkey"))
