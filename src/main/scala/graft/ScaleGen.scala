@@ -84,6 +84,12 @@ object ScaleGen {
         asked
       case None => _ => true
     }
+    // fail fast like the unknown-table guard: a vocab dir without the
+    // corpus (say, a table list passed in its place) would otherwise
+    // fail only after the tables before documents were rewritten
+    require(!want("documents") || new java.io.File(s"$vocabDir/documents.parquet").exists,
+      s"scalegen: no $vocabDir/documents.parquet to draw the documents vocabulary from — " +
+        "usage: ScaleGen <sf> <outDir> [vocabDir] [tables]")
     val spark = Harness.session()
 
     val nCust = (150000 * sf).toLong.max(1)

@@ -1,5 +1,5 @@
 package graft.tick
-import graft.Pinned.PinnedOps
+import graft.Pinned
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
@@ -24,7 +24,10 @@ import org.apache.spark.sql.types._
   * first, last_ts_ns, last, count)` — long-form because the field set
   * is dynamic per point (schemaless maps). Coarser levels cascade from
   * the next finer level (minute → hour → day → month → year), each a
-  * pure re-merge, so a full build reads the raw points exactly once.
+  * pure re-merge, so a build reads the raw points exactly once.
+  * A full build ([[materialize]]) and the refresh after a write
+  * ([[refresh]]) are one bottom-up pass ([[rebuild]]) over a set of
+  * `(index, day)` partitions: all of them, or the touched ones.
   *
   * At 100 TB this is the read-amplification win the pyramid bought the
   * reference: a year-level query over years of data reads a few
@@ -84,123 +87,104 @@ object Rollup {
   private def isFine(level: GroupUnit): Boolean =
     level == GroupUnit.Minute || level == GroupUnit.Hour || level == GroupUnit.Day
 
-  private def ymOf(bucket: Column): Column = date_format(bucket, "yyyy-MM")
-
-  private def write(df: DataFrame, store: TickStore, db: String, level: GroupUnit,
-      mode: SaveMode): Unit = {
-    val out = levelPath(store, db, level).toString
-    if (isFine(level))
-      df.withColumn("ym", ymOf(col("bucket")))
-        .pinned // cut lineage: may read what it overwrites
-        .repartition(col("index"))
-        .write.partitionBy("index", "ym")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(mode).parquet(out)
-    else
-      df.pinned
-        .repartition(col("index"))
-        .write.partitionBy("index")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(mode).parquet(out)
-  }
-
-  /** Build (or rebuild) every rollup level for a db. Raw points are
-    * read once; each coarser level derives from the finer one.
+  /** The key of a level's rows that a change to a day's points makes
+    * stale, as a date format of the bucket: the day on fine levels, its
+    * month or year on calendar levels; a fixed-length prefix of the day.
     */
-  def materialize(spark: SparkSession, store: TickStore, db: String): Unit = {
-    if (store.read(spark, db).isEmpty) return // nothing to roll up
-    val longForm = store.read(spark, db)
-      .select(col("index"), col("ts"), col("ts_ns"),
-        explode(col("value")).as(Seq("field", "v")))
-    var current: DataFrame = null
-    levels.foreach { level =>
-      val rolled =
-        if (current == null) rollFromPoints(longForm, level)
-        else rollUp(current, level)
-      write(rolled, store, db, level, SaveMode.Overwrite)
-      current = read(spark, store, db, level)
-    }
+  private def keyFormat(level: GroupUnit): String = level match {
+    case GroupUnit.Month => "yyyy-MM"
+    case GroupUnit.Year  => "yyyy"
+    case _               => "yyyy-MM-dd"
   }
 
-  /** Incrementally refresh the rollups after a mutation that touched
-    * the given (index, day) point partitions — the analog of the
-    * reference's insert-time pyramid reduce along the dirty branch
-    * (`node.go:523-579`), at partition granularity:
-    *
-    *  - minute/hour/day buckets of the touched days are recomputed from
-    *    the touched points only, and merged into their (index, ym)
-    *    rollup partitions (other rows of those partitions survive via
-    *    anti-join; untouched partitions are not rewritten);
-    *  - month/year buckets covering the touched days are re-derived
-    *    from the freshly refreshed day level — reading tiny rollup
-    *    rows, never raw points.
-    *
-    * Cost: O(points of touched days + rollup rows of touched months).
+  /** Rows whose `(index, key)` is in `pairs`, as one set lookup (the
+    * joined string is unambiguous: the keys of one call share a length).
+    */
+  private def pairIn(key: Column, pairs: Set[(String, String)]): Column =
+    concat_ws("/", col("index"), key).isin(pairs.toSeq.map { case (i, k) => s"$i/$k" }: _*)
+
+  private def write(df: DataFrame, store: TickStore, db: String, level: GroupUnit): Unit =
+    (if (isFine(level)) df.withColumn("ym", date_format(col("bucket"), "yyyy-MM")) else df)
+      .repartition(col("index"))
+      .write.partitionBy((if (isFine(level)) Seq("index", "ym") else Seq("index")): _*)
+      .option("partitionOverwriteMode", "dynamic")
+      .mode(SaveMode.Overwrite).parquet(levelPath(store, db, level).toString)
+
+  /** Build every rollup level of a db: a [[rebuild]] over every stored
+    * `(index, day)`. Cost: one read of the raw points, then one pin and
+    * one write per level.
+    */
+  def materialize(spark: SparkSession, store: TickStore, db: String): Unit =
+    rebuild(spark, store, db, store.partitions(spark, db, store.listIndexes(spark, db)))
+
+  /** Refresh the rollups after a mutation of the given `(index, day)`
+    * point partitions, once the db is materialized: a [[rebuild]] of
+    * them. Cost: O(points of the touched days + rollup rows of the
+    * rewritten partitions), one pin and one write per level.
     */
   def refresh(spark: SparkSession, store: TickStore, db: String,
+      touched: Seq[(String, String)]): Unit =
+    if (exists(spark, store, db)) rebuild(spark, store, db, touched)
+
+  /** Recompute the rollups of the touched `(index, day)` partitions
+    * level by level, finest first: the reference's insert-time reduce
+    * along the dirty branch (`node.go:523-579`), per partition.
+    *
+    *  - Minute rows of the touched days roll from their points; each
+    *    coarser level is [[rollUp]] of the finer level's new content,
+    *    restricted to buckets that hold a touched day.
+    *  - A level rewrites the touched `(index, ym)` partitions on fine
+    *    levels and the touched `index` partitions on calendar levels.
+    *    Their new content is the recomputed rows plus the survivors (the
+    *    rows of their other stored days), pinned once and written once.
+    *  - A rewritten partition left with no stored day is deleted: dynamic
+    *    overwrite leaves alone a partition it writes no row to.
+    *
+    * The stored days come from one listing of the touched indexes: every
+    * stored point has a field ([[TickStore.ingest]]), so every stored
+    * day has rows on every level.
+    */
+  private def rebuild(spark: SparkSession, store: TickStore, db: String,
       touched: Seq[(String, String)]): Unit = {
-    if (touched.isEmpty || !exists(spark, store, db)) return
-    import spark.implicits._
-    val touchedDf = touched.toDF("index", "day")
-    val touchedYmDf = touched.map { case (i, d) => (i, d.substring(0, 7)) }
-      .distinct.toDF("index", "ym")
+    val stored = store.partitions(spark, db, touched.map(_._1)).toSet
+    val fs = levelPath(store, db, levels.head).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    var finer: Option[DataFrame] = None // the finer level's new content
+    levels.foreach { level =>
+      def keys(days: Iterable[(String, String)]) =
+        days.map { case (i, d) => (i, d.take(keyFormat(level).length)) }.toSet
+      def partition(day: (String, String)) = s"index=${TickStore.escape(day._1)}" +
+        (if (isFine(level)) s"/ym=${day._2.take(7)}" else "")
+      val rewritten = touched.map(partition).toSet
+      val kept = stored.filter(d => rewritten(partition(d)))
+      val recomputedKeys = keys(touched) & keys(kept)
+      val survivorKeys = keys(kept) -- recomputedKeys
+      val key = date_format(col("bucket"), keyFormat(level))
 
-    val pts = store.read(spark, db)
-      .join(broadcast(touchedDf), Seq("index", "day"), "left_semi")
-      .select(col("index"), col("ts"), col("ts_ns"),
-        explode(col("value")).as(Seq("field", "v")))
-
-    // fine levels: recompute touched-day buckets from points
-    Seq(GroupUnit.Minute, GroupUnit.Hour, GroupUnit.Day).foreach { level =>
-      val recomputed = rollFromPoints(pts, level)
-      val survivors = read(spark, store, db, level)
-        .join(broadcast(touchedYmDf), Seq("index", "ym"), "left_semi")
-        .withColumn("day", date_format(col("bucket"), "yyyy-MM-dd"))
-        .join(broadcast(touchedDf), Seq("index", "day"), "left_anti")
-        .select("index", "bucket", "field", "sum", "max", "min",
-          "first_ts_ns", "first", "last_ts_ns", "last", "count")
-      val newContent = survivors.unionByName(recomputed).pinned
-      // a touched ym partition with no rows in the new content would be
-      // skipped by dynamic overwrite and keep stale files: compute the
-      // survivor partition set BEFORE writing, drop the emptied dirs after
-      val t = touchedYmDf.toDF("t_index", "t_ym")
-      val keptYms = newContent
-        .join(broadcast(t),
-          col("index") === col("t_index") && ymOf(col("bucket")) === col("t_ym"), "left_semi")
-        .select(col("index"), ymOf(col("bucket")).as("ym"))
-        .distinct().collect().map(r => (r.getString(0), r.getString(1))).toSet
-      write(newContent, store, db, level, SaveMode.Overwrite)
-      val fs = levelPath(store, db, level)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      touchedYmDf.collect().foreach { r =>
-        val (i, ym) = (r.getString(0), r.getString(1))
-        if (!keptYms.contains((i, ym))) {
-          val p = new Path(levelPath(store, db, level), s"index=${TickStore.escape(i)}/ym=$ym")
-          if (fs.exists(p)) fs.delete(p, true)
-        }
-      }
-    }
-
-    // calendar levels: cascade from the refreshed finer level
-    Seq(GroupUnit.Month -> GroupUnit.Day, GroupUnit.Year -> GroupUnit.Month).foreach {
-      case (level, finerLevel) =>
-        val bucketTrunc = GroupSpec(1, level)
-        val finer = read(spark, store, db, finerLevel)
-        val affectedBuckets = touchedYmDf
-          .withColumn("bucket", bucketTrunc.bucket(to_timestamp(concat(col("ym"), lit("-01")))))
-          .select("index", "bucket").distinct()
-        val recomputed = rollUp(
-          finer.withColumn("qb", bucketTrunc.bucket(col("bucket")))
-            .join(broadcast(affectedBuckets.withColumnRenamed("bucket", "qb")),
-              Seq("index", "qb"), "left_semi")
-            .drop("qb"),
-          level)
-        val survivors = read(spark, store, db, level)
-          .join(broadcast(affectedBuckets), Seq("index", "bucket"), "left_anti")
+      val recomputed =
+        if (recomputedKeys.isEmpty) None
+        else if (level == levels.head) Some(rollFromPoints(store.read(spark, db)
+          .where(pairIn(col("day"), recomputedKeys))
+          .select(col("index"), col("ts"), col("ts_ns"),
+            explode(col("value")).as(Seq("field", "v"))), level))
+        else finer.map(f => rollUp(f.where(pairIn(key, recomputedKeys)), level))
+      val survivors = Option.when(survivorKeys.nonEmpty) {
+        val prune = // to the rewritten partitions
+          if (isFine(level)) pairIn(col("ym"), survivorKeys.map { case (i, d) => (i, d.take(7)) })
+          else col("index").isin(survivorKeys.map(_._1).toSeq: _*)
+        read(spark, store, db, level).where(prune && pairIn(key, survivorKeys))
           .select("index", "bucket", "field", "sum", "max", "min",
             "first_ts_ns", "first", "last_ts_ns", "last", "count")
-        write(survivors.unionByName(recomputed), store, db, level, SaveMode.Overwrite)
+      }
+      // one pin: the write may overwrite what the survivors read, and the
+      // next level rolls up from it
+      val content = (survivors ++ recomputed).reduceOption(_ unionByName _).map(Pinned.checkpoint)
+      content.foreach(write(_, store, db, level))
+      (rewritten -- kept.map(partition))
+        .foreach(dir => fs.delete(new Path(levelPath(store, db, level), dir), true))
+      finer.foreach(Pinned.release) // its blocks: read by this level's pin only
+      finer = content
     }
+    finer.foreach(Pinned.release)
   }
 
   /** Decimal type of the `sum` stat on every level: the precision the

@@ -77,6 +77,23 @@ final class TickStore(val root: String) {
       .map(n => TickStore.unescape(n.stripPrefix("index="))).toSeq.sorted
   }
 
+  /** The stored `(index, day)` partitions of `indexes`: one listing of
+    * each index's dir, not one existence check per day.
+    */
+  def partitions(spark: SparkSession, db: String, indexes: Seq[String]): Seq[(String, String)] = {
+    val f = fs(spark)
+    indexes.distinct.flatMap { i =>
+      val days =
+        try f.listStatus(new Path(tablePath(db), s"index=${escape(i)}")).toSeq
+        catch { case _: java.io.FileNotFoundException => Nil }
+      days.filter(_.isDirectory).map(_.getPath.getName)
+        .filter(_.startsWith("day=")).map(d => i -> unescape(d.stripPrefix("day=")))
+    }
+  }
+
+  private def partitionPath(db: String, index: String, day: String) =
+    new Path(tablePath(db), s"index=${escape(index)}/day=${escape(day)}")
+
   /** Drop one series: its point partitions AND its rollup partitions —
     * rollups routed queries read must never outlive the data (dynamic
     * partition overwrite would otherwise preserve the stale rollup
@@ -195,14 +212,8 @@ final class TickStore(val root: String) {
     // one listStatus per touched index, not one exists() RPC per
     // (index, day): a backfill touching 10k days would serialize on
     // per-partition driver round-trips otherwise
-    val f = fs(spark)
-    val collide = touchedPairs.groupBy(_._1).toSeq.flatMap { case (i, pairs) =>
-      val idxPath = new Path(tablePath(db), s"index=${escape(i)}")
-      val existingDays =
-        try f.listStatus(idxPath).map(_.getPath.getName).toSet
-        catch { case _: java.io.FileNotFoundException => Set.empty[String] }
-      pairs.filter { case (_, d) => existingDays.contains(s"day=${escape(d)}") }
-    }
+    val stored = partitions(spark, db, touchedPairs.map(_._1)).toSet
+    val collide = touchedPairs.filter(stored)
 
     // one shuffle total: repartition(index, day) satisfies the window's
     // (index, day, ts_ns) clustering (subset of the keys), so the
@@ -253,8 +264,7 @@ final class TickStore(val root: String) {
 
     // pyramid maintenance at insert time (node.go:523-579), partition-
     // granular: refresh rollups for exactly the touched (index, day)s
-    if (Rollup.exists(spark, this, db))
-      Rollup.refresh(spark, this, db, touchedPairs)
+    Rollup.refresh(spark, this, db, touchedPairs)
   }
 
   /** Compact a db's point files: rewrite each (index, day) partition
@@ -267,16 +277,10 @@ final class TickStore(val root: String) {
     */
   def compact(spark: SparkSession, db: String, maxFilesPerPartition: Int = 4): Unit = {
     val f = fs(spark)
-    val t = tablePath(db)
-    if (!f.exists(t)) return
-    val fragmented = for {
-      idx <- f.listStatus(t).toSeq if idx.isDirectory
-      day <- f.listStatus(idx.getPath).toSeq if day.isDirectory
-      files = f.listStatus(day.getPath).count(s => s.isFile && !s.getPath.getName.startsWith("_"))
-      if files > maxFilesPerPartition
-    } yield (
-      TickStore.unescape(idx.getPath.getName.stripPrefix("index=")),
-      day.getPath.getName.stripPrefix("day="))
+    val fragmented = partitions(spark, db, listIndexes(spark, db)).filter { case (i, d) =>
+      f.listStatus(partitionPath(db, i, d))
+        .count(s => s.isFile && !s.getPath.getName.startsWith("_")) > maxFilesPerPartition
+    }
     if (fragmented.isEmpty) return
     import spark.implicits._
     val targets = fragmented.toDF("index", "day")
@@ -293,7 +297,7 @@ final class TickStore(val root: String) {
       .write.partitionBy("index", "day")
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
-      .parquet(t.toString)
+      .parquet(tablePath(db).toString)
   }
 
   // ---- range delete (reference A9: `node.go:320-521`) ----
@@ -307,17 +311,10 @@ final class TickStore(val root: String) {
   def deleteRange(spark: SparkSession, db: String, index: String, fromNs: Long, toNs: Long): Unit = {
     require(fromNs <= toNs, "deleteRange requires fromNs <= toNs")
     if (fromNs == toNs) return
-    val f = fs(spark)
-    val idxPath = new Path(tablePath(db), s"index=${escape(index)}")
-    if (!f.exists(idxPath)) return
-
     val fromDay = dayOfNs(fromNs)
     val lastDay = dayOfNs(toNs - 1)
-    val days = f.listStatus(idxPath).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("day="))
-      .map(_.stripPrefix("day=")).toSeq
-
-    val affected = days.filter(d => d >= fromDay && d <= lastDay)
+    val affected = partitions(spark, db, Seq(index)).map(_._2)
+      .filter(d => d >= fromDay && d <= lastDay)
     val (boundary, interior) = affected.partition { d =>
       // a day is boundary iff the range does not cover it entirely
       dayStartNs(d) < fromNs || dayEndNs(d) > toNs
@@ -334,9 +331,7 @@ final class TickStore(val root: String) {
           .pinned
       }
 
-    (interior ++ boundary).foreach { d =>
-      f.delete(new Path(idxPath, s"day=$d"), true)
-    }
+    (interior ++ boundary).foreach(d => fs(spark).delete(partitionPath(db, index, d), true))
     survivors.foreach { s =>
       if (!s.isEmpty)
         s.repartition(col("index"), col("day"))

@@ -78,10 +78,11 @@ class RollupSpec extends SparkSpec {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     val s = new TickStore(root)
     s.createDb(spark, "db")
-    def rec(t: String, v: Double) = TickIngestRecord("ix", t, Map("v" -> v))
+    def rec(t: String, v: Double, index: String = "ix") = TickIngestRecord(index, t, Map("v" -> v))
     s.ingestRecords(spark, "db", Seq(
       rec("2024-03-01T10:00:00Z", 1.0), rec("2024-03-02T11:00:00Z", 2.0),
-      rec("2024-04-05T09:30:00Z", 3.0)))
+      rec("2024-04-05T09:30:00Z", 3.0),
+      rec("2024-03-01T10:00:00Z", 5.0, "gone"), rec("2024-06-07T08:00:00Z", 7.0, "gone")))
     Rollup.materialize(spark, s, "db")
 
     // upsert: new day + overwrite of an existing point, NO re-materialize
@@ -92,16 +93,21 @@ class RollupSpec extends SparkSpec {
     // delete a whole day and a partial range, NO re-materialize
     def ns(t: String) = java.time.Instant.parse(t).getEpochSecond * 1000000000L
     s.deleteRange(spark, "db", "ix", ns("2024-03-02T00:00:00Z"), ns("2024-03-02T23:59:59Z"))
+    // delete every point of one index: its month and year rollups must go too
+    s.deleteRange(spark, "db", "gone", ns("2024-01-01T00:00:00Z"), ns("2025-01-01T00:00:00Z"))
 
-    for (level <- Seq("minute", "hour", "day", "month", "year");
-         reducer <- Seq("sum", "min", "max", "first", "last", "count", "avg")) {
+    for (index <- Seq("ix", "gone");
+         level <- Seq("minute", "hour", "day", "month", "year");
+         reducer <- if (index == "ix") Seq("sum", "min", "max", "first", "last", "count", "avg")
+                    else Seq("sum")) {
       val query = q(
-        s"""{"index":"ix","group":"$level","fields":{"v":{"reducer":"$reducer"}}}""")
+        s"""{"index":"$index","group":"$level","fields":{"v":{"reducer":"$reducer"}}}""")
       val rolled = s.query(spark, "db", query)
         .collect().map(r => (r.getTimestamp(0), r.get(1))).toSeq
       val direct = s.query(spark, "db", query, exact = true, useRollups = false)
         .collect().map(r => (r.getTimestamp(0), r.get(1))).toSeq
-      assert(rolled == direct, s"incremental mismatch at level=$level reducer=$reducer")
+      assert(rolled == direct,
+        s"incremental mismatch at index=$index level=$level reducer=$reducer")
     }
     // the replaced point's new value flowed through (10.0, not 1.0)
     val march = s.query(spark, "db", q(

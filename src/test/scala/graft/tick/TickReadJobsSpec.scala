@@ -7,10 +7,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
 
-/** The fixed Spark cost of a tick read, in jobs: a raw scan is one
-  * top-K collect, a rollup-routed read is its aggregation's shuffle
-  * stage plus the collect, and reading a rollup level (fixed schema, no
-  * footer inference) runs no job at all.
+/** The fixed Spark cost of the tick paths, in jobs. A read: a raw scan
+  * is one top-K collect, a rollup-routed read is its aggregation's
+  * shuffle stage plus the collect, and reading a rollup level (fixed
+  * schema, no footer inference) runs no job at all. A rollup write: a
+  * one-day refresh and a full materialize are each one bottom-up pass
+  * that pins and writes every level once.
   */
 class TickReadJobsSpec extends SparkSpec {
 
@@ -66,5 +68,18 @@ class TickReadJobsSpec extends SparkSpec {
     assert(jobsOf {
       Rollup.levels.foreach(level => Rollup.read(spark, store, "db", level).schema)
     } == 0)
+  }
+
+  // the write path: one bottom-up pass over the levels, each level
+  // pinned once and written once (the refresh it replaced re-aggregated
+  // the points per fine level and pinned each level twice)
+  test("a one-day rollup refresh runs at most 20 jobs (42 before the one-pass rebuild)") {
+    val jobs = jobsOf { Rollup.refresh(spark, store, "db", Seq("ix" -> "2024-03-02")) }
+    assert(jobs <= 20, s"$jobs jobs")
+  }
+
+  test("materialize runs at most 20 jobs (21 before the one-pass rebuild)") {
+    val jobs = jobsOf { Rollup.materialize(spark, store, "db") }
+    assert(jobs <= 20, s"$jobs jobs")
   }
 }
