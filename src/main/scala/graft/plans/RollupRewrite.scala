@@ -69,9 +69,8 @@ object RollupRewrite {
   private[plans] def lookup(paths: Seq[Path]): Option[(TickStore, String)] =
     paths.headOption.flatMap(p => registry.get(norm(p.toString)))
 
-  private[plans] val levels: Map[String, GroupUnit] = Map(
-    "minute" -> GroupUnit.Minute, "hour" -> GroupUnit.Hour, "day" -> GroupUnit.Day,
-    "month" -> GroupUnit.Month, "year" -> GroupUnit.Year)
+  private[plans] val levels: Map[String, GroupUnit] =
+    Rollup.levels.map(u => u.name -> u).toMap
 }
 
 class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {

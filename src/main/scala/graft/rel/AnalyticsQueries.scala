@@ -5,7 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.{Fixtures, QueryDef, Tables}
+import graft.sources.SnapshotStore
 
 /** Round-5 analytics surface: iterative graph ranking, Pareto
   * frontiers, robust outlier detection, dataset profiling, and the
@@ -31,21 +32,6 @@ object AnalyticsQueries {
         date_format(col("ts"), "yyyy-MM-dd").as("part"),
         lit(0L).as("seq"),
         expr("CAST(round(value*100) AS BIGINT)").as("vc"))
-
-  /** Resume-safe store builder: `steps(i)` must take the store from
-    * version i to i+1, so a crash between steps never shifts later
-    * versions — the next run resumes at the step the version count
-    * points to.
-    */
-  private def ensureVersions(s: org.apache.spark.sql.SparkSession, base: String)(
-      steps: (() => Unit)*): String = {
-    val cur = graft.sources.SnapshotStore.currentVersion(s, base)
-    steps.drop(cur).foreach(_())
-    base
-  }
-
-  private def storeBase(d: String, tag: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${tag}_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
 
   /** Supplier co-order pair counts — `(u, v, cnt)`, u < v, cnt = how
     * many orders both suppliers appear in. The shared prefix of the
@@ -162,21 +148,19 @@ object AnalyticsQueries {
       .where(col("n") > 0)
   }
 
-  /** Build (once per sf dir, resume-safe) the two-version click
-    * snapshot store that store_time_travel / store_history / changes
-    * query: v1 = all clicks keyed by event_id, day-partitioned;
-    * v2 = the day-5 rows upserted with +1000 cents.
+  /** Build (once per sf dir) the two-version click snapshot store
+    * that store_time_travel / store_history / changes query: v1 = all
+    * clicks keyed by event_id, day-partitioned; v2 = the day-5 rows
+    * upserted with +1000 cents.
     */
-  private def ensureClickStore(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    import graft.sources.SnapshotStore
-    val base = s"${sys.props("java.io.tmpdir")}/graft_snap_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-    ensureVersions(s, base)(
-      () => SnapshotStore.commit(s, base, clicksOf(s, d)),
-      () => SnapshotStore.commit(s, base,
+  private def ensureClickStore(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Fixtures.cached(s, d, "snap", "events") { base =>
+      SnapshotStore.commit(s, base, clicksOf(s, d))
+      SnapshotStore.commit(s, base,
         clicksOf(s, d).where(col("part") === "2024-01-05")
           .withColumn("seq", lit(1L))
-          .withColumn("vc", col("vc") + 1000L)))
-  }
+          .withColumn("vc", col("vc") + 1000L))
+    }
 
   /** Three-version store for store_delete_vectors: v1 = all clicks,
     * v2 = DELETION-VECTOR delete of every key%3==0 row (no data dir
@@ -184,19 +168,17 @@ object AnalyticsQueries {
     * commit re-inserting the key%6==0 half with +5000 cents (which
     * must CLEAR those keys from the DV so the new rows surface).
     */
-  private def ensureDvStore(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    import graft.sources.SnapshotStore
-    val base = storeBase(d, "snapdv")
-    ensureVersions(s, base)(
-      () => SnapshotStore.commit(s, base, clicksOf(s, d)),
-      () => { SnapshotStore.deleteRowsDv(s, base,
+  private def ensureDvStore(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Fixtures.cached(s, d, "snapdv", "events") { base =>
+      SnapshotStore.commit(s, base, clicksOf(s, d))
+      SnapshotStore.deleteRowsDv(s, base,
         clicksOf(s, d).where(col("key").cast("long") % 3 === 0)
-          .select("key", "part")); () },
-      () => SnapshotStore.commit(s, base,
+          .select("key", "part"))
+      SnapshotStore.commit(s, base,
         clicksOf(s, d).where(col("key").cast("long") % 6 === 0)
           .withColumn("seq", lit(1L))
-          .withColumn("vc", col("vc") + 5000L)))
-  }
+          .withColumn("vc", col("vc") + 5000L))
+    }
 
   /** One-version store for store_zone_skip: clicks keyed by event_id,
     * day-partitioned, with vc = EPOCH MICROSECONDS — a value axis that
@@ -204,53 +186,46 @@ object AnalyticsQueries {
     * zone-map stats turn a value-range query into a few-partition
     * read without the reader knowing the partition semantics.
     */
-  private def ensureZoneStore(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    import graft.sources.SnapshotStore
-    val base = storeBase(d, "snapzone")
-    ensureVersions(s, base)(
-      () => SnapshotStore.commit(s, base,
+  private def ensureZoneStore(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Fixtures.cached(s, d, "snapzone", "events") { base =>
+      SnapshotStore.commit(s, base,
         Tables.events(s, d).where(col("event_type") === "click")
           .select(col("event_id").cast("string").as("key"),
             date_format(col("ts"), "yyyy-MM-dd").as("part"),
             lit(0L).as("seq"),
-            expr("unix_micros(ts)").as("vc"))))
-  }
+            expr("unix_micros(ts)").as("vc")))
+    }
 
   /** Branch store for store_branch_diff: a shallow clone of the click
     * store (zero-copy v1) that then DIVERGES — one commit upserting
     * the day-7 rows (+777) and inserting fresh keys on day 3. The
     * clone's evolution never touches the source's dirs.
     */
-  private def ensureBranchStore(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    import graft.sources.SnapshotStore
-    val src = ensureClickStore(s, d)
-    val base = storeBase(d, "snapbranch")
-    ensureVersions(s, base)(
-      () => { SnapshotStore.shallowClone(s, src, base); () },
-      () => SnapshotStore.commit(s, base,
+  private def ensureBranchStore(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Fixtures.cached(s, d, "snapbranch", "events") { base =>
+      SnapshotStore.shallowClone(s, ensureClickStore(s, d), base)
+      SnapshotStore.commit(s, base,
         clicksOf(s, d).where(col("part") === "2024-01-07")
           .withColumn("seq", lit(2L))
           .withColumn("vc", col("vc") + 777L)
           .unionByName(clicksOf(s, d)
             .where(col("part") === "2024-01-03" && col("key").cast("long") % 3 === 0)
             .withColumn("key", (col("key").cast("long") + 900000L).cast("string"))
-            .withColumn("seq", lit(2L)))))
-  }
+            .withColumn("seq", lit(2L))))
+    }
 
   /** Two-version store for store_schema_evolution: v2's day-5 upsert
     * CARRIES A COLUMN v1 NEVER HAD (`quality`) — the schema evolves in
     * place, no historical rewrite.
     */
-  private def ensureEvoStore(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    import graft.sources.SnapshotStore
-    val base = storeBase(d, "snapevo")
-    ensureVersions(s, base)(
-      () => SnapshotStore.commit(s, base, clicksOf(s, d)),
-      () => SnapshotStore.commit(s, base,
+  private def ensureEvoStore(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Fixtures.cached(s, d, "snapevo", "events") { base =>
+      SnapshotStore.commit(s, base, clicksOf(s, d))
+      SnapshotStore.commit(s, base,
         clicksOf(s, d).where(col("part") === "2024-01-05")
           .withColumn("seq", lit(1L))
-          .withColumn("quality", col("vc") % 100)))
-  }
+          .withColumn("quality", col("vc") % 100))
+    }
 
   /** Four-version customer-dimension store for store_scd2 — the classic
     * slowly-changing-dimension ingest timeline, synthesized
@@ -261,36 +236,34 @@ object AnalyticsQueries {
     * branch is exercised without rule interaction.
     */
   private def ensureDimStore(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    import graft.sources.SnapshotStore
     def dim = Tables.customer(s, d).select(
       col("c_custkey").cast("string").as("key"),
       (col("c_custkey") % 5).cast("string").as("part"),
       lit(0L).as("seq"), col("c_custkey").as("vc"),
       col("c_mktsegment").as("seg"))
-    val base = storeBase(d, "snapdim")
-    ensureVersions(s, base)(
-      () => SnapshotStore.commit(s, base, dim),
-      () => SnapshotStore.commit(s, base,
+    Fixtures.cached(s, d, "snapdim", "customer") { base =>
+      SnapshotStore.commit(s, base, dim)
+      SnapshotStore.commit(s, base,
         dim.where(col("vc") % 10 === 0)
-          .withColumn("seq", lit(1L)).withColumn("seg", lit("MOVED1"))),
-      () => SnapshotStore.commit(s, base,
+          .withColumn("seq", lit(1L)).withColumn("seg", lit("MOVED1")))
+      SnapshotStore.commit(s, base,
         dim.where(col("vc") % 20 === 5)
           .withColumn("seq", lit(2L)).withColumn("seg", lit("MOVED2"))
           .unionByName(dim.where(col("vc") < 20)
             .withColumn("key", (col("vc") + 1000000L).cast("string"))
             .withColumn("vc", col("vc") + 1000000L)
-            .withColumn("seq", lit(2L)))),
-      () => { SnapshotStore.delete(s, base, Seq("0", "1", "2", "3", "4"),
-        col("key").cast("long") % 50 === 7); () })
+            .withColumn("seq", lit(2L))))
+      SnapshotStore.delete(s, base, Seq("0", "1", "2", "3", "4"),
+        col("key").cast("long") % 50 === 7)
+    }
   }
 
   /** Two-version orders fact store + the v1 denormalized join view
     * MATERIALIZED to parquet, for store_incremental_join: v1 = the
     * orderkey%3!=0 orders, v2 = the rest committed as inserts. Returns
-    * (storeBase, mvPath).
+    * (store base, mv path).
     */
   private def ensureFactStore(s: org.apache.spark.sql.SparkSession, d: String): (String, String) = {
-    import graft.sources.SnapshotStore
     def fact(pred: org.apache.spark.sql.Column) =
       Tables.orders(s, d).where(pred).select(
         col("o_orderkey").cast("string").as("key"),
@@ -299,20 +272,17 @@ object AnalyticsQueries {
         col("o_custkey").as("cust"),
         expr("CAST(round(o_totalprice*100) AS BIGINT)").as("pc"),
         col("o_orderstatus").as("st"))
-    val base = storeBase(d, "snapfact")
-    ensureVersions(s, base)(
-      () => SnapshotStore.commit(s, base, fact(col("o_orderkey") % 3 =!= 0)),
-      () => SnapshotStore.commit(s, base, fact(col("o_orderkey") % 3 === 0)))
-    val mvPath = s"$base/mv_join_v1"
-    val fs = new org.apache.hadoop.fs.Path(mvPath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$mvPath/_SUCCESS")))
+    def mvPath(base: String) = s"$base/mv_join_v1"
+    val base = Fixtures.cached(s, d, "snapfact", "orders", "customer") { base =>
+      SnapshotStore.commit(s, base, fact(col("o_orderkey") % 3 =!= 0))
+      SnapshotStore.commit(s, base, fact(col("o_orderkey") % 3 === 0))
       SnapshotStore.readVersion(s, base, 1)
         .join(broadcast(Tables.customer(s, d)
           .select(col("c_custkey").as("cust"), col("c_mktsegment").as("seg"))), "cust")
         .select("key", "seg", "st", "pc")
-        .write.mode("overwrite").parquet(mvPath)
-    (base, mvPath)
+        .write.parquet(mvPath(base))
+    }
+    (base, mvPath(base))
   }
 
   /** CDF-driven FOLLOWER store for store_replicate_cdf: v1 = initial
@@ -321,17 +291,15 @@ object AnalyticsQueries {
     * miniature. Only the feed crosses "the wire"; the follower never
     * re-reads the source table.
     */
-  private def ensureReplicaStore(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    import graft.sources.SnapshotStore
-    val src = ensureClickStore(s, d)
-    val base = storeBase(d, "snaprepl")
-    ensureVersions(s, base)(
-      () => SnapshotStore.commit(s, base, SnapshotStore.readVersion(s, src, 1)),
-      () => SnapshotStore.commit(s, base,
+  private def ensureReplicaStore(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Fixtures.cached(s, d, "snaprepl", "events") { base =>
+      val src = ensureClickStore(s, d)
+      SnapshotStore.commit(s, base, SnapshotStore.readVersion(s, src, 1))
+      SnapshotStore.commit(s, base,
         SnapshotStore.changes(s, src, 1, 2, withValues = true)
           .where(col("change_type").isin("insert", "update_postimage"))
-          .select("key", "part", "seq", "vc")))
-  }
+          .select("key", "part", "seq", "vc"))
+    }
 
   /** See [[graft.tick.StoreQueries.benchSetups]]: fixture builders the
     * bench times once, outside the measured laps.
@@ -367,7 +335,6 @@ object AnalyticsQueries {
         |FROM c
         |WHERE us >= 1704672000000000 AND us <= 1704931199999999
         |GROUP BY part ORDER BY part""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
       val base = ensureZoneStore(s, d)
       SnapshotStore.readVersionVcRange(s, base,
           SnapshotStore.currentVersion(s, base),
@@ -397,7 +364,6 @@ object AnalyticsQueries {
         |SELECT part, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(vc) AS BIGINT) AS total
         |FROM r GROUP BY part ORDER BY part""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
       val base = ensureDvStore(s, d)
       SnapshotStore.readVersion(s, base, 3)
         .groupBy("part")
@@ -439,7 +405,6 @@ object AnalyticsQueries {
         |       CAST(valid_to AS INTEGER) AS valid_to
         |FROM scd WHERE is_del = 0
         |ORDER BY key, valid_from""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
       val base = ensureDimStore(s, d)
       val initial = SnapshotStore.readVersion(s, base, 1)
         .select(col("key"), col("seg"), lit(1).as("v"), lit(0).as("is_del"))
@@ -474,7 +439,6 @@ object AnalyticsQueries {
         |       CAST(SUM(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS total
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
       val (base, mvPath) = ensureFactStore(s, d)
       val delta = SnapshotStore.changes(s, base, 1, 2, withValues = true)
         .where(col("change_type") === "insert")
@@ -504,7 +468,6 @@ object AnalyticsQueries {
         |           FROM events WHERE event_type = 'click')
         |SELECT part, COUNT(*) AS n, CAST(SUM(vc) AS BIGINT) AS total
         |FROM c GROUP BY part ORDER BY part""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
       val base = ensureReplicaStore(s, d)
       SnapshotStore.readVersion(s, base, 2)
         .groupBy("part")
@@ -1548,7 +1511,6 @@ object AnalyticsQueries {
         |                       ELSE vc END) AS BIGINT) FROM c)
         |SELECT * FROM v1 UNION ALL SELECT * FROM v2
         |ORDER BY version""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
       val base = ensureClickStore(s, d)
       Seq(1, 2).map { v =>
         SnapshotStore.readVersion(s, base, v)
@@ -1571,7 +1533,6 @@ object AnalyticsQueries {
         |SELECT CAST(1 AS BIGINT) AS version, n_parts, n_rows FROM d
         |UNION ALL SELECT CAST(2 AS BIGINT), n_parts, n_rows FROM d
         |ORDER BY version""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
       val base = ensureClickStore(s, d)
       SnapshotStore.history(s, base).map { case (v, nParts) =>
         SnapshotStore.readVersion(s, base, v)
@@ -1600,24 +1561,22 @@ object AnalyticsQueries {
         |        AND strftime(ts, '%Y-%m-%d') = '2024-01-03')
         |SELECT part, COUNT(*) AS n, CAST(SUM(vc) AS BIGINT) AS total
         |FROM m GROUP BY part ORDER BY part""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
-      val base = ensureVersions(s, storeBase(d, "snapm"))(
-        () => SnapshotStore.commit(s, storeBase(d, "snapm"), clicksOf(s, d)),
-        () => {
-          val day3 = Tables.events(s, d)
-            .where(date_format(col("ts"), "yyyy-MM-dd") === "2024-01-03")
-          val updDel = day3.where(col("event_type") === "click")
-            .select(col("event_id").cast("string").as("key"),
-              lit("2024-01-03").as("part"), lit(1L).as("seq"),
-              when(col("event_id") % 10 === 0, lit(-1L)).otherwise(lit(500L)).as("vc"))
-          val ins = day3.where(col("event_type") === "purchase")
-            .select(concat(lit("p"), col("event_id").cast("string")).as("key"),
-              lit("2024-01-03").as("part"), lit(1L).as("seq"),
-              expr("CAST(round(value*100) AS BIGINT)").as("vc"))
-          SnapshotStore.merge(s, storeBase(d, "snapm"), updDel.unionByName(ins),
-            matchedDelete = col("s.vc") === -1L,
-            matchedUpdateVc = col("t.vc") + col("s.vc"))
-        })
+      val base = Fixtures.cached(s, d, "snapm", "events") { base =>
+        SnapshotStore.commit(s, base, clicksOf(s, d))
+        val day3 = Tables.events(s, d)
+          .where(date_format(col("ts"), "yyyy-MM-dd") === "2024-01-03")
+        val updDel = day3.where(col("event_type") === "click")
+          .select(col("event_id").cast("string").as("key"),
+            lit("2024-01-03").as("part"), lit(1L).as("seq"),
+            when(col("event_id") % 10 === 0, lit(-1L)).otherwise(lit(500L)).as("vc"))
+        val ins = day3.where(col("event_type") === "purchase")
+          .select(concat(lit("p"), col("event_id").cast("string")).as("key"),
+            lit("2024-01-03").as("part"), lit(1L).as("seq"),
+            expr("CAST(round(value*100) AS BIGINT)").as("vc"))
+        SnapshotStore.merge(s, base, updDel.unionByName(ins),
+          matchedDelete = col("s.vc") === -1L,
+          matchedUpdateVc = col("t.vc") + col("s.vc"))
+      }
       SnapshotStore.readVersion(s, base, 2)
         .groupBy("part")
         .agg(count(lit(1)).as("n"), sum("vc").as("total"))
@@ -1640,14 +1599,14 @@ object AnalyticsQueries {
         |         CAST(SUM(vc) AS BIGINT) FROM c)
         |SELECT * FROM v2 UNION ALL SELECT * FROM v3
         |ORDER BY version""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
-      val base = ensureVersions(s, storeBase(d, "snaprest"))(
-        () => SnapshotStore.commit(s, storeBase(d, "snaprest"), clicksOf(s, d)),
-        () => SnapshotStore.commit(s, storeBase(d, "snaprest"),
+      val base = Fixtures.cached(s, d, "snaprest", "events") { base =>
+        SnapshotStore.commit(s, base, clicksOf(s, d))
+        SnapshotStore.commit(s, base,
           clicksOf(s, d).where(col("part") === "2024-01-05")
             .withColumn("seq", lit(1L))
-            .withColumn("vc", col("vc") + 1000L)),
-        () => SnapshotStore.restore(s, storeBase(d, "snaprest"), 1))
+            .withColumn("vc", col("vc") + 1000L))
+        SnapshotStore.restore(s, base, 1)
+      }
       Seq(2, 3).map { v =>
         SnapshotStore.readVersion(s, base, v)
           .agg(count(lit(1)).as("n"), sum("vc").as("total"))
@@ -1670,16 +1629,15 @@ object AnalyticsQueries {
         |                ELSE vc END) AS BIGINT) AS total,
         |  CAST(1 AS BIGINT) AS n_live
         |FROM c""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
-      val base = storeBase(d, "snapvac")
-      ensureVersions(s, base)(
-        () => SnapshotStore.commit(s, base, clicksOf(s, d)),
-        () => SnapshotStore.commit(s, base,
+      val base = Fixtures.cached(s, d, "snapvac", "events") { base =>
+        SnapshotStore.commit(s, base, clicksOf(s, d))
+        SnapshotStore.commit(s, base,
           clicksOf(s, d).where(col("part") === "2024-01-05")
             .withColumn("seq", lit(1L))
-            .withColumn("vc", col("vc") + 1000L)))
+            .withColumn("vc", col("vc") + 1000L))
+      }
       // vacuum is idempotent and does not advance the version counter,
-      // so it runs outside the resume-safe version steps
+      // so it runs on every call, outside the fixture build
       SnapshotStore.vacuum(s, base, keepVersions = 1)
       val nLive = SnapshotStore.history(s, base).size.toLong
       SnapshotStore.readVersion(s, base, 2)
@@ -1705,7 +1663,6 @@ object AnalyticsQueries {
         |UNION ALL
         |SELECT key, part, 'update_postimage', 1, vc + 1000 FROM c
         |ORDER BY key, change_type""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
       val base = ensureClickStore(s, d)
       SnapshotStore.changes(s, base, 1, 2).orderBy("key", "change_type")
     },
@@ -1720,10 +1677,10 @@ object AnalyticsQueries {
         |  CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS total
         |FROM events WHERE event_type = 'click'
         |GROUP BY part ORDER BY part""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
-      val base = ensureVersions(s, storeBase(d, "snapc"))(
-        () => SnapshotStore.commit(s, storeBase(d, "snapc"), clicksOf(s, d)),
-        () => SnapshotStore.compact(s, storeBase(d, "snapc")))
+      val base = Fixtures.cached(s, d, "snapc", "events") { base =>
+        SnapshotStore.commit(s, base, clicksOf(s, d))
+        SnapshotStore.compact(s, base)
+      }
       SnapshotStore.readVersion(s, base, 2)
         .groupBy("part")
         .agg(count(lit(1)).as("n"), sum("vc").as("total"))
@@ -1749,15 +1706,14 @@ object AnalyticsQueries {
         |UNION ALL
         |SELECT 'source', part, COUNT(*), CAST(SUM(vc) AS BIGINT) FROM c GROUP BY part
         |ORDER BY side, part""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
       val base = ensureClickStore(s, d)
-      val cb = storeBase(d, "snapclone")
-      ensureVersions(s, cb)(
-        () => { SnapshotStore.shallowClone(s, base, cb); () },
-        () => { SnapshotStore.commit(s, cb,
+      val cb = Fixtures.cached(s, d, "snapclone", "events") { cb =>
+        SnapshotStore.shallowClone(s, base, cb)
+        SnapshotStore.commit(s, cb,
           clicksOf(s, d).where(col("part") === "2024-01-03")
             .withColumn("seq", lit(1L))
-            .withColumn("vc", col("vc") + 500L)); () })
+            .withColumn("vc", col("vc") + 500L))
+      }
       def sideAgg(b: String, side: String) =
         SnapshotStore.readVersion(s, b, 2).groupBy("part")
           .agg(count(lit(1)).as("n"), sum("vc").as("total"))
@@ -1784,15 +1740,12 @@ object AnalyticsQueries {
         |           FROM events WHERE event_type = 'click')
         |SELECT part, COUNT(*) AS n, CAST(SUM(vc) AS BIGINT) AS total
         |FROM c GROUP BY part ORDER BY part""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
       val base = ensureClickStore(s, d)
-      val mvPath = s"$base/mv_v1"
-      val fs = new org.apache.hadoop.fs.Path(mvPath)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$mvPath/_SUCCESS")))
+      val mvPath = Fixtures.cached(s, d, "snapmv", "events") { mv =>
         SnapshotStore.readVersion(s, base, 1).groupBy("part")
           .agg(count(lit(1)).as("n"), sum("vc").as("total"))
-          .write.mode("overwrite").parquet(mvPath)
+          .write.parquet(mv)
+      }
       refreshCountSumView(s, base, s.read.parquet(mvPath), 1, 2)
         .orderBy("part")
     },
@@ -1830,7 +1783,6 @@ object AnalyticsQueries {
         |SELECT class, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(dv) AS BIGINT) AS vc_delta
         |FROM j GROUP BY class ORDER BY class""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
       val srcBase = ensureClickStore(s, d)
       val brBase = ensureBranchStore(s, d)
       val src = SnapshotStore.readVersion(s, srcBase,
@@ -2004,7 +1956,6 @@ object AnalyticsQueries {
         |       FROM c)
         |SELECT * FROM v1 UNION ALL SELECT * FROM v2
         |ORDER BY version""".stripMargin) { (s, d) =>
-      import graft.sources.SnapshotStore
       val base = ensureEvoStore(s, d)
       Seq(1, 2).map { v =>
         val df = SnapshotStore.readVersion(s, base, v)
@@ -2041,20 +1992,19 @@ object AnalyticsQueries {
         |SELECT * FROM v1 UNION ALL SELECT * FROM v2
         |ORDER BY version, series""".stripMargin) { (s, d) =>
       import graft.tick.TickVersioned
-      val base = s"${sys.props("java.io.tmpdir")}/graft_ticksnap_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      val pts = Tables.events(s, d).select(
-        col("event_type").as("index"),
-        col("ts_ns"),
-        lit("value").as("field"),
-        expr("CAST(round(value*100) AS BIGINT)").as("vc"),
-        date_format(col("ts"), "yyyy-MM-dd").as("d0"))
-      // resume-safe build, like store_time_travel
-      val cur = TickVersioned.currentVersion(s, base)
-      if (cur == 0) TickVersioned.commit(s, base, pts.drop("d0"))
-      if (cur <= 1) TickVersioned.commit(s, base,
-        pts.where(col("d0") === "2024-01-05").drop("d0")
-          .withColumn("vc", col("vc") + 500L)
-          .withColumn("seq", lit(1L)))
+      val base = Fixtures.cached(s, d, "ticksnap", "events") { base =>
+        val pts = Tables.events(s, d).select(
+          col("event_type").as("index"),
+          col("ts_ns"),
+          lit("value").as("field"),
+          expr("CAST(round(value*100) AS BIGINT)").as("vc"),
+          date_format(col("ts"), "yyyy-MM-dd").as("d0"))
+        TickVersioned.commit(s, base, pts.drop("d0"))
+        TickVersioned.commit(s, base,
+          pts.where(col("d0") === "2024-01-05").drop("d0")
+            .withColumn("vc", col("vc") + 500L)
+            .withColumn("seq", lit(1L)))
+      }
       Seq(1, 2).map { v =>
         TickVersioned.readAsOfRange(s, base, v, "2024-01-04", "2024-01-06")
           .groupBy(col("index").as("series"))
@@ -2072,13 +2022,10 @@ object AnalyticsQueries {
     "source_json_roundtrip" -> QueryDef(
       """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
         |WHERE o_orderkey <= 5000 ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-      val path = s"${sys.props("java.io.tmpdir")}/graft_json_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))) {
+      val path = Fixtures.cached(s, d, "json", "orders") { out =>
         Tables.orders(s, d).where(col("o_orderkey") <= 5000)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
-          .write.mode("overwrite").json(path)
+          .write.json(out)
       }
       s.read
         .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE")

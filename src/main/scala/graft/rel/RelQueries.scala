@@ -479,52 +479,21 @@ object RelQueries {
     (to, tl)
   }
 
-  /** Cache path for a derived-format fixture (csv/orc/xml/partitioned
-    * copies of a testdata table), keyed by BOTH the sf dir and a
-    * CONTENT fingerprint of the source parquet (total bytes + max
-    * mtime of its files). Regenerated testdata under the same path
-    * therefore misses the cache and rebuilds, instead of a stale
-    * `_SUCCESS`-guarded fixture serving old rows against an oracle
-    * that reads the new parquet (the r12 ADVICE hazard — the csv/orc/
-    * xml twins all shared it).
-    */
-  private[graft] def fixtureCachePath(
-      s: org.apache.spark.sql.SparkSession, d: String, tag: String,
-      sourceTable: String): String = {
-    val src = new org.apache.hadoop.fs.Path(s"$d/$sourceTable.parquet")
-    val fs = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-    var bytes = 0L; var mtime = 0L
-    val it = fs.listFiles(src, true)
-    while (it.hasNext) {
-      val f = it.next()
-      bytes += f.getLen
-      if (f.getModificationTime > mtime) mtime = f.getModificationTime
-    }
-    val fp = java.lang.Long.toHexString(bytes * 1000003L ^ mtime)
-    s"${sys.props("java.io.tmpdir")}/graft_${tag}_" +
-      s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_$fp"
-  }
-
-  /** See [[graft.tick.StoreQueries.benchSetups]]. */
   /** Day-partitioned parquet copy of events (hive layout, one dir per
     * `day=` value), written once per sf dir — the fixture behind
     * source_partitioned_roundtrip's pruning claims.
     */
   private[graft] def partitionedEventsPath(
-      s: org.apache.spark.sql.SparkSession, d: String): String = synchronized {
-    val path = fixtureCachePath(s, d, "partev", "events")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))) {
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    graft.Fixtures.cached(s, d, "partev", "events") { path =>
       graft.Tables.events(s, d)
         .select(date_format(col("ts"), "yyyy-MM-dd").as("day"),
           col("event_type"),
           expr("CAST(round(value*100) AS BIGINT)").as("vc"))
-        .write.mode("overwrite").partitionBy("day").parquet(path)
+        .write.partitionBy("day").parquet(path)
     }
-    path
-  }
 
+  /** See [[graft.tick.StoreQueries.benchSetups]]. */
   private[graft] val benchSetups
       : Map[String, (org.apache.spark.sql.SparkSession, String) => Unit] = Map(
     "layout_bucketed_join" -> ((s, d) => { buildBucketedTables(s, d); () }),
@@ -1634,13 +1603,10 @@ object RelQueries {
     "source_csv_roundtrip" -> QueryDef(
       """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
         |WHERE o_orderkey <= 5000 ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-      val path = fixtureCachePath(s, d, "csv", "orders")
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))) {
+      val path = graft.Fixtures.cached(s, d, "csv", "orders") { out =>
         Tables.orders(s, d).where(col("o_orderkey") <= 5000)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
-          .write.mode("overwrite").option("header", "true").csv(path)
+          .write.option("header", "true").csv(out)
       }
       s.read
         .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE")
@@ -1656,13 +1622,10 @@ object RelQueries {
     "source_orc_roundtrip" -> QueryDef(
       """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
         |WHERE o_orderkey <= 5000 ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-      val path = fixtureCachePath(s, d, "orc", "orders")
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))) {
+      val path = graft.Fixtures.cached(s, d, "orc", "orders") { out =>
         Tables.orders(s, d).where(col("o_orderkey") <= 5000)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
-          .write.mode("overwrite").orc(path)
+          .write.orc(out)
       }
       s.read.orc(path).orderBy("o_orderkey")
     },
@@ -1677,14 +1640,11 @@ object RelQueries {
     "source_xml_roundtrip" -> QueryDef(
       """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
         |WHERE o_orderkey <= 5000 ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-      val path = fixtureCachePath(s, d, "xml", "orders")
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))) {
+      val path = graft.Fixtures.cached(s, d, "xml", "orders") { out =>
         Tables.orders(s, d).where(col("o_orderkey") <= 5000)
           .select("o_orderkey", "o_orderstatus", "o_totalprice")
-          .write.mode("overwrite").option("rootTag", "orders")
-          .option("rowTag", "order").format("xml").save(path)
+          .write.option("rootTag", "orders")
+          .option("rowTag", "order").format("xml").save(out)
       }
       s.read
         .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE")

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   *    manifest's entry forward, so a commit costs O(touched
   *    partitions) storage and the untouched ones are physically SHARED
   *    between snapshots
-  *  - commits are atomic via write-temp + rename of the manifest (the
-  *    single mutation readers resolve); a reader of version N sees an
-  *    immutable file set no later commit can disturb
+  *  - commits are atomic via write-temp + link/rename of the manifest
+  *    (the single mutation readers resolve); a reader of version N
+  *    sees an immutable file set no later commit can disturb
   *  - `vacuum(keep)` bounds storage: it drops all but the newest
   *    `keep` manifests and deletes every partition directory no
   *    surviving manifest references — shared directories survive for
@@ -45,12 +45,14 @@ import org.apache.spark.sql.functions._
   * file set. Writers serialize on the MANIFEST CAS in [[publish]] —
   * exactly one attempt can create `v<N>.manifest`, the loser removes
   * its private attempt directory and throws [[CommitRaceException]]
-  * (SnapshotSpec pins the loser's cleanup). The CAS is only as atomic
-  * as the filesystem's create-if-absent rename: HDFS rename refuses an
-  * existing destination, but POSIX rename OVERWRITES one, so the
-  * local-FS `exists || !rename` check narrows the race without closing
-  * it. A rename-atomic FS or an external lock/catalog (the role a
-  * Delta LogStore or an Iceberg catalog plays) makes the CAS exact.
+  * (SnapshotSpec pins the loser's cleanup and races two publishers on
+  * one version). The CAS is the filesystem's create-if-absent step: on
+  * the local FS a hard link of the written temp manifest, which fails
+  * atomically when the name exists (POSIX rename would OVERWRITE a
+  * winner's manifest); elsewhere a rename, which HDFS refuses onto an
+  * existing destination. A store whose filesystem lacks both (an
+  * object store) needs an external lock/catalog for the CAS (the role
+  * a Delta LogStore or an Iceberg catalog plays).
   *
   * ==Multi-writer retry (round 12) — the conflict matrix==
   *
@@ -183,11 +185,19 @@ object SnapshotStore {
     try out.write(manifest.toSeq.sorted.map { case (p, d) => s"$p\t$d" }
       .mkString("\n").getBytes("UTF-8"))
     finally out.close()
-    // rename IS the commit point: readers either see v<next> complete
-    // or not at all; rename-onto-existing fails, so exactly one
-    // attempt publishes each version
-    if (f.exists(manifestPath(base, next)) || !f.rename(tmp, manifestPath(base, next))) {
-      f.delete(tmp, false)
+    // creating v<next> IS the commit point: readers either see it
+    // complete or not at all, and exactly one attempt creates it. A
+    // POSIX rename overwrites an existing destination, so the local FS
+    // hard-links instead, which fails atomically if the file exists;
+    // other filesystems' rename already refuses an existing destination
+    val won =
+      if (f.getUri.getScheme == "file") {
+        def local(p: Path) = java.nio.file.Paths.get(f.makeQualified(p).toUri)
+        try { java.nio.file.Files.createLink(local(manifestPath(base, next)), local(tmp)); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      } else !f.exists(manifestPath(base, next)) && f.rename(tmp, manifestPath(base, next))
+    f.delete(tmp, false)
+    if (!won) {
       f.delete(new Path(dataDir), true)
       throw new CommitRaceException(
         s"commit of v$next lost a race; this attempt's data was removed")

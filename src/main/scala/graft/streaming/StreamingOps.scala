@@ -207,22 +207,17 @@ object StreamingOps {
     * it drains (the combination the batch-commit and streamed-rollup
     * gates each prove half of). The 'error' series is staged as FOUR
     * parquet files and the file stream takes one per trigger, so the
-    * AvailableNow drain produces exactly four versions. `_done`-marker
-    * cached per sf dir (bench laps time the as-of read, not the
-    * build); the checkpoint makes a crashed build rebuild from
-    * scratch rather than double-commit.
+    * AvailableNow drain produces exactly four versions. A
+    * [[graft.Fixtures]] fixture (bench laps time the as-of read, not
+    * the build): a crashed build rebuilds from scratch rather than
+    * double-commit.
     *
     * Returns (store base, version count after the drain).
     */
-  def versionedIngestOnce(spark: SparkSession, dir: String): (String, Int) = synchronized {
+  def versionedIngestOnce(spark: SparkSession, dir: String): (String, Int) = {
     import graft.tick.TickVersioned
-    val root = s"${sys.props("java.io.tmpdir")}/graft_vstream_v1_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(root, "_done")
-    val base = s"$root/store"
-    if (!fs.exists(done)) {
-      fs.delete(rootPath, true)
+    def base(root: String) = s"$root/store"
+    val root = graft.Fixtures.cached(spark, dir, "vstream", "events") { root =>
       val srcDir = s"$root/incoming"
       graft.Tables.events(spark, dir).where(col("event_type") === "error")
         .select("event_id", "ts_ns", "value")
@@ -241,7 +236,7 @@ object StreamingOps {
             // key = error|ts_ns|event_id (unique per event, so the
             // final state is exactly the raw series — no same-µs LWW
             // collapse for the oracle to disagree about)
-            TickVersioned.commit(batch.sparkSession, base, batch.select(
+            TickVersioned.commit(batch.sparkSession, base(root), batch.select(
               lit("error").as("index"),
               col("ts_ns"),
               col("event_id").cast("string").as("field"),
@@ -253,9 +248,8 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      fs.create(done, true).close()
     }
-    (base, TickVersioned.currentVersion(spark, base))
+    (base(root), TickVersioned.currentVersion(spark, base(root)))
   }
 
   /** Streamed GDPR-style deletion: v1 commits all clicks into a
@@ -266,22 +260,17 @@ object StreamingOps {
     * deletion requests arrive continuously; each lands as a tiny
     * sidecar commit). Returns (store base, final version).
     */
-  def dvDeleteStreamOnce(spark: SparkSession, dir: String): (String, Int) = synchronized {
+  def dvDeleteStreamOnce(spark: SparkSession, dir: String): (String, Int) = {
     import graft.sources.SnapshotStore
-    val root = s"${sys.props("java.io.tmpdir")}/graft_dvstream_v1_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(root, "_done")
-    val base = s"$root/store"
-    if (!fs.exists(done)) {
-      fs.delete(rootPath, true)
+    def base(root: String) = s"$root/store"
+    val root = graft.Fixtures.cached(spark, dir, "dvstream", "events") { root =>
       val clicks = graft.Tables.events(spark, dir)
         .where(col("event_type") === "click")
         .select(col("event_id").cast("string").as("key"),
           date_format(col("ts"), "yyyy-MM-dd").as("part"),
           lit(0L).as("seq"),
           expr("CAST(round(value*100) AS BIGINT)").as("vc"))
-      SnapshotStore.commit(spark, base, clicks) // v1: the full table
+      SnapshotStore.commit(spark, base(root), clicks) // v1: the full table
       val srcDir = s"$root/incoming"
       clicks.where(col("key").cast("long") % 5 === 0)
         .select("key", "part")
@@ -297,16 +286,15 @@ object StreamingOps {
         .option("checkpointLocation", s"$root/_chk")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           if (!batch.isEmpty)
-            SnapshotStore.deleteRowsDv(batch.sparkSession, base,
+            SnapshotStore.deleteRowsDv(batch.sparkSession, base(root),
               batch.select("key", "part"))
           ()
         }
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      fs.create(done, true).close()
     }
-    (base, graft.sources.SnapshotStore.currentVersion(spark, base))
+    (base(root), SnapshotStore.currentVersion(spark, base(root)))
   }
 
   /** Watermarked append-mode aggregation (for the unit suite): with a

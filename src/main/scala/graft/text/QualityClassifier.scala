@@ -306,29 +306,19 @@ object QualityClassifier {
     * model: key = coefficient name, part = 'model', vc = the pico-grid
     * integer beta (the vc column IS the payload — betas are integers
     * by construction, so the registry round-trip is lossless by type,
-    * not by fp luck). Fingerprint-keyed /tmp cache like docStoreBase.
+    * not by fp luck). A [[graft.Fixtures]] fixture keyed on the
+    * documents table, like docStoreBase.
     */
   private def modelStoreBase(s: SparkSession, d: String): String =
-    synchronized {
-      val fp = {
-        val p = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-        val st = p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p)
-        s"${st.getLen}_${st.getModificationTime}"
-      }
-      val base = s"${sys.props("java.io.tmpdir")}/graft_modelreg_v1_${fp}_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+    graft.Fixtures.cached(s, d, "modelreg", "documents") { base =>
       import graft.sources.SnapshotStore
-      if (SnapshotStore.currentVersion(s, base) < 2) {
-        val p = new org.apache.hadoop.fs.Path(base)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        def rows(b: DataFrame) = b.selectExpr(
-          "stack(4, 'b0', b0, 'b1', b1, 'b2', b2, 'b3', b3) AS (key, vc)")
-          .select(col("key"), lit("model").as("part"), lit(0L).as("seq"), col("vc"))
-        val fitted = train(featsDf(s, d), rounds = 4)
-        SnapshotStore.commit(s, base, rows(fitted))
-        SnapshotStore.commit(s, base,
-          rows(fitted.selectExpr("b0 - 500000000 AS b0", "b1", "b2", "b3")))
-      }
-      base
+      def rows(b: DataFrame) = b.selectExpr(
+        "stack(4, 'b0', b0, 'b1', b1, 'b2', b2, 'b3', b3) AS (key, vc)")
+        .select(col("key"), lit("model").as("part"), lit(0L).as("seq"), col("vc"))
+      val fitted = train(featsDf(s, d), rounds = 4)
+      SnapshotStore.commit(s, base, rows(fitted))
+      SnapshotStore.commit(s, base,
+        rows(fitted.selectExpr("b0 - 500000000 AS b0", "b1", "b2", "b3")))
     }
 
   private[graft] val benchSetups

@@ -22,33 +22,22 @@ object TextQueries {
     * the oracle replants the same rule from the raw table). The store
     * row model carries the text identity as vc = the first-15-hex md5
     * prefix parsed as BIGINT, the engine-portable digest the hashed-
-    * features query established. Cached per (sf dir, documents
-    * fingerprint) like the tick stores.
+    * features query established. A [[graft.Fixtures]] fixture keyed on
+    * the documents table.
     */
   private def docStoreBase(s: org.apache.spark.sql.SparkSession, d: String): String =
-    synchronized {
-      val fp = {
-        val p = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-        val st = p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p)
-        s"${st.getLen}_${st.getModificationTime}"
-      }
-      val base = s"${sys.props("java.io.tmpdir")}/graft_docstore_v1_${fp}_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+    graft.Fixtures.cached(s, d, "docstore", "documents") { base =>
       import graft.sources.SnapshotStore
-      if (SnapshotStore.currentVersion(s, base) < 2) {
-        val p = new org.apache.hadoop.fs.Path(base)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        val h = expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-        def rows(df: org.apache.spark.sql.DataFrame) = df.select(
-          col("doc_id").cast("string").as("key"), col("lang").as("part"),
-          lit(0L).as("seq"), h.as("vc"))
-        val docs = Tables.documents(s, d)
-        SnapshotStore.commit(s, base, rows(docs.where(col("doc_id") < 400)))
-        SnapshotStore.commit(s, base, rows(
-          docs.where(col("doc_id") >= 400).unionByName(
-            docs.where(col("doc_id") < 50)
-              .withColumn("doc_id", col("doc_id") + 10000L))))
-      }
-      base
+      val h = expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.select(
+        col("doc_id").cast("string").as("key"), col("lang").as("part"),
+        lit(0L).as("seq"), h.as("vc"))
+      val docs = Tables.documents(s, d)
+      SnapshotStore.commit(s, base, rows(docs.where(col("doc_id") < 400)))
+      SnapshotStore.commit(s, base, rows(
+        docs.where(col("doc_id") >= 400).unionByName(
+          docs.where(col("doc_id") < 50)
+            .withColumn("doc_id", col("doc_id") + 10000L))))
     }
 
   /** The text_levenshtein_pairs pipeline over an arbitrary (doc_id,

@@ -249,20 +249,12 @@ object Rollup {
       case u => Some(u)
     }
     candidate.filter { u =>
-      val unitNs: Long = u match {
-        case GroupUnit.Minute => 60L * 1000000000L
-        case GroupUnit.Hour   => 3600L * 1000000000L
-        case GroupUnit.Day    => 86400L * 1000000000L
-        case _                => 0L
-      }
       def aligned(i: java.time.Instant): Boolean = u match {
         case GroupUnit.Month | GroupUnit.Year =>
           val z = i.atZone(java.time.ZoneOffset.UTC)
           z.getDayOfMonth == 1 && z.toLocalTime == java.time.LocalTime.MIDNIGHT &&
             (u == GroupUnit.Month || z.getMonthValue == 1)
-        case _ =>
-          val ns = i.getEpochSecond * 1000000000L + i.getNano
-          ns % unitNs == 0
+        case _ => TickQuery.instantNs(i) % (u.fixedSeconds * 1000000000L) == 0
       }
       q.from.forall(aligned) && q.to.forall(aligned)
     }

@@ -3,7 +3,7 @@ package graft.tick
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.{Fixtures, QueryDef, Tables}
 
 /** Verify-gate coverage for the storage layer (SURVEY §2.A rows A6/A7/
   * A9): each entry builds a real [[TickStore]] under /tmp from the
@@ -14,115 +14,66 @@ import graft.{QueryDef, Tables}
   */
 object StoreQueries {
 
+  /** One event type's events of a sf dir as one ingest batch. */
+  private def series(spark: SparkSession, dir: String, eventType: String): DataFrame =
+    Tables.events(spark, dir).where(col("event_type") === eventType)
+      .select(col("event_type").as("index"), col("ts_ns"),
+        map(lit("value"), col("value")).as("value"),
+        col("event_id").as("seq"))
+
   /** Store + materialized rollups over the 'view' events of a sf dir;
     * built once per dir and reused (content is deterministic).
     */
-  private def rollupStore(spark: SparkSession, dir: String): TickStore = synchronized {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_store_rollup_v3_${srcTag(spark, dir)}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    val store = new TickStore(root)
-    if (!Rollup.exists(spark, store, "db")) {
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+  private def rollupStore(spark: SparkSession, dir: String): TickStore =
+    new TickStore(Fixtures.cached(spark, dir, "store_rollup", "events") { root =>
+      val store = new TickStore(root)
       store.createDb(spark, "db")
-      store.ingest(spark, "db",
-        Tables.events(spark, dir).where(col("event_type") === "view")
-          .select(col("event_type").as("index"), col("ts_ns"),
-            map(lit("value"), col("value")).as("value"),
-            col("event_id").as("seq")))
+      store.ingest(spark, "db", series(spark, dir, "view"))
       Rollup.materialize(spark, store, "db")
-    }
-    store
-  }
+    })
 
   /** Store + rollups over 'view' events with a range DELETED after
     * materialization — exercises the incremental rollup refresh on the
-    * delete path. Built once per dir; the `_done` marker (written only
-    * after the delete) makes the cached end state crash-safe: a build
-    * interrupted anywhere reruns from scratch.
+    * delete path.
     */
-  private[tick] val deleteFromNs: Long = epochNsOf("2024-01-08T12:00:00Z")
-  private[tick] val deleteToNs: Long = epochNsOf("2024-01-12T00:00:00Z")
-  private def epochNsOf(s: String): Long = {
-    val i = java.time.Instant.parse(s); i.getEpochSecond * 1000000000L + i.getNano
-  }
-  private def rollupDeleteStore(spark: SparkSession, dir: String): TickStore = synchronized {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_store_rollupdel_v2_${srcTag(spark, dir)}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    val store = new TickStore(root)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(root, "_done")
-    if (!fs.exists(done)) {
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+  private[tick] val deleteFromNs: Long = TickQuery.parseTimeNs("2024-01-08T12:00:00Z")
+  private[tick] val deleteToNs: Long = TickQuery.parseTimeNs("2024-01-12T00:00:00Z")
+  private def rollupDeleteStore(spark: SparkSession, dir: String): TickStore =
+    new TickStore(Fixtures.cached(spark, dir, "store_rollupdel", "events") { root =>
+      val store = new TickStore(root)
       store.createDb(spark, "db")
-      store.ingest(spark, "db",
-        Tables.events(spark, dir).where(col("event_type") === "view")
-          .select(col("event_type").as("index"), col("ts_ns"),
-            map(lit("value"), col("value")).as("value"),
-            col("event_id").as("seq")))
+      store.ingest(spark, "db", series(spark, dir, "view"))
       Rollup.materialize(spark, store, "db")
       store.deleteRange(spark, "db", "view", deleteFromNs, deleteToNs)
-      fs.create(done, true).close()
-    }
-    store
-  }
+    })
 
   /** Store fragmented by six chunked ingests of the 'error' series
     * (6 files per (index, day) partition), then compacted to one file
-    * per partition. `_done`-marker cached like [[rollupDeleteStore]].
+    * per partition.
     */
-  private def compactedStore(spark: SparkSession, dir: String): TickStore = synchronized {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_store_compact_v2_${srcTag(spark, dir)}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    val store = new TickStore(root)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(root, "_done")
-    if (!fs.exists(done)) {
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+  private def compactedStore(spark: SparkSession, dir: String): TickStore =
+    new TickStore(Fixtures.cached(spark, dir, "store_compact", "events") { root =>
+      val store = new TickStore(root)
       store.createDb(spark, "db")
-      val errs = Tables.events(spark, dir).where(col("event_type") === "error")
-        .select(col("event_type").as("index"), col("ts_ns"),
-          map(lit("value"), col("value")).as("value"),
-          col("event_id").as("seq"))
+      val errs = series(spark, dir, "error")
       (0 until 6).foreach { i =>
         store.ingest(spark, "db", errs.where(col("seq") % 6 === i))
       }
       store.compact(spark, "db", maxFilesPerPartition = 2)
-      fs.create(done, true).close()
-    }
-    store
-  }
+    })
 
-  /** Fingerprint of the sf dir's events source (length + mtime): baked
-    * into cached-store roots so a driver-regenerated testdata can
-    * never pair a stale /tmp store with a fresh oracle.
+  /** Upsert-roundtrip store (batch1 then batch2): the ingest+upsert
+    * write jobs run once — in the bench they are SETUP (timed
+    * separately via [[benchSetups]]), and the measured query is the
+    * store read-back.
     */
-  private def srcTag(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-    s"${st.getLen}_${st.getModificationTime}"
-  }
-
-  /** Upsert-roundtrip store (batch1 then batch2), `_done`-cached per
-    * (sf dir, events fingerprint): the ingest+upsert write jobs run
-    * once — in the bench they are SETUP (timed separately via
-    * [[benchSetups]]), and the measured query is the store read-back.
-    */
-  private def upsertStore(spark: SparkSession, dir: String): TickStore = synchronized {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_store_upsert_c1_${srcTag(spark, dir)}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    val store = new TickStore(root)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(root, "_done")
-    if (!fs.exists(done)) {
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+  private def upsertStore(spark: SparkSession, dir: String): TickStore =
+    new TickStore(Fixtures.cached(spark, dir, "store_upsert", "events") { root =>
+      val store = new TickStore(root)
       store.createDb(spark, "db")
       store.ingest(spark, "db", batch1(spark, dir))
       store.ingest(spark, "db", batch2(spark, dir))
-      fs.create(done, true).close()
-    }
-    store
-  }
+    })
 
   /** Fixture builders for store-building bench entries: Bench times
     * these separately (setup_sec) so the lap times measure the QUERY
@@ -184,8 +135,7 @@ object StoreQueries {
         |FROM events
         |WHERE event_type IN ('click', 'error')
         |ORDER BY idx, ts""".stripMargin) { (spark, dir) =>
-      // the ingest->upsert write jobs run once via the cached builder
-      // (fingerprint-keyed to the testdata, so regeneration rebuilds);
+      // the ingest->upsert write jobs run once via the cached builder;
       // the measured query is the read-back of the upserted store
       val store = upsertStore(spark, dir)
       store.read(spark, "db")
@@ -207,15 +157,10 @@ object StoreQueries {
         |ORDER BY ts""".stripMargin) { (spark, dir) =>
       val (store, db) = freshStore(spark, dir, "delete")
       store.createDb(spark, db)
-      store.ingest(spark, db,
-        Tables.events(spark, dir).where(col("event_type") === "view")
-          .select(col("event_type").as("index"), col("ts_ns"),
-            map(lit("value"), col("value")).as("value"),
-            col("event_id").as("seq")))
-      val fromNs = java.time.Instant.parse("2024-01-10T06:30:00Z")
-      val toNs = java.time.Instant.parse("2024-01-19T18:45:00Z")
-      def ns(i: java.time.Instant) = i.getEpochSecond * 1000000000L + i.getNano
-      store.deleteRange(spark, db, "view", ns(fromNs), ns(toNs))
+      store.ingest(spark, db, series(spark, dir, "view"))
+      store.deleteRange(spark, db, "view",
+        TickQuery.parseTimeNs("2024-01-10T06:30:00Z"),
+        TickQuery.parseTimeNs("2024-01-19T18:45:00Z"))
       store.read(spark, db)
         .select(col("ts"), element_at(col("value"), "value").as("v"))
         .orderBy("ts")

@@ -14,8 +14,5 @@ final case class TickPoint(index: String, tsNs: Long, value: Map[String, Double]
   * layout [[TickQuery.parseTime]] accepts.
   */
 final case class TickIngestRecord(index: String, time: String, value: Map[String, Double]) {
-  def toPoint: TickPoint = {
-    val i = TickQuery.parseTime(time)
-    TickPoint(index, i.getEpochSecond * 1000000000L + i.getNano, value)
-  }
+  def toPoint: TickPoint = TickPoint(index, TickQuery.parseTimeNs(time), value)
 }

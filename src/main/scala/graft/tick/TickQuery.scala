@@ -3,7 +3,7 @@ package graft.tick
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 
 import scala.jdk.CollectionConverters._
 
@@ -118,6 +118,4 @@ object TickQuery {
       group = strOpt("group").map(GroupSpec.parse),
       fields = fields)
   }
-
-  private def nodeToText(n: JsonNode): String = n.asText
 }

@@ -43,9 +43,6 @@ trait TickSource {
     (f ++ t).reduceOption(_ && _)
   }
 
-  protected final def epochNs(i: java.time.Instant): Long =
-    i.getEpochSecond * 1000000000L + i.getNano
-
   // ---- oracle-SQL mirrors (DuckDB dialect, same semantics) ----
   def tableSql: String
   def tsSql: String
@@ -86,12 +83,12 @@ final case class EventsSource(spark: SparkSession, dir: String) extends TickSour
     */
   override def rangePredicate(from: Option[java.time.Instant], to: Option[java.time.Instant]): Option[Column] = {
     if (tsIsLongNanos) {
-      val f = from.map(i => frame("ts_ns") >= lit(epochNs(i)))
-      val t = to.map(i => frame("ts_ns") < lit(epochNs(i)))
+      val f = from.map(i => frame("ts_ns") >= lit(TickQuery.instantNs(i)))
+      val t = to.map(i => frame("ts_ns") < lit(TickQuery.instantNs(i)))
       (f ++ t).reduceOption(_ && _)
     } else {
       def ceilUs(i: java.time.Instant): Column =
-        timestamp_micros(lit(Math.floorDiv(epochNs(i) + 999L, 1000L)))
+        timestamp_micros(lit(Math.floorDiv(TickQuery.instantNs(i) + 999L, 1000L)))
       val f = from.map(i => frame("ts") >= ceilUs(i))
       val t = to.map(i => frame("ts") < ceilUs(i))
       (f ++ t).reduceOption(_ && _)

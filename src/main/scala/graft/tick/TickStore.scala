@@ -390,13 +390,11 @@ final case class StoreSource(store: TickStore, spark: SparkSession, db: String) 
     * store lists and reads only its days.
     */
   override def rangePredicate(from: Option[java.time.Instant], to: Option[java.time.Instant]): Option[Column] = {
-    val f = from.map { i =>
-      frame("ts_ns") >= lit(epochNs(i)) &&
-        frame("day") >= lit(TickStore.dayOfNs(epochNs(i)))
+    val f = from.map(TickQuery.instantNs).map { ns =>
+      frame("ts_ns") >= lit(ns) && frame("day") >= lit(TickStore.dayOfNs(ns))
     }
-    val t = to.map { i =>
-      frame("ts_ns") < lit(epochNs(i)) &&
-        frame("day") <= lit(TickStore.dayOfNs(epochNs(i) - 1))
+    val t = to.map(TickQuery.instantNs).map { ns =>
+      frame("ts_ns") < lit(ns) && frame("day") <= lit(TickStore.dayOfNs(ns - 1))
     }
     (f ++ t).reduceOption(_ && _)
   }

@@ -99,30 +99,19 @@ object VecAnalytics {
   /** The IVF-PQ INDEX artifacts — trained codebooks, corpus codes,
     * inverted-list assignments — are build-time products in any real
     * deployment: trained once when the index is built, reused by every
-    * query. They are cached here as /tmp parquet keyed by an
-    * embeddings-parquet fingerprint (len+mtime), so regenerated
-    * testdata rebuilds while bench laps measure the SEARCH path
-    * (query LUT + ADC scan + exact re-rank) the way production pays
-    * it. Everything cached is integer fixed point, so a cached read
-    * is bit-identical to a fresh computation — the oracle (which
-    * recomputes training inline) cannot tell the difference.
+    * query. They are cached here as [[graft.Fixtures]] parquet keyed
+    * on the embeddings table, so regenerated testdata rebuilds while
+    * bench laps measure the SEARCH path (query LUT + ADC scan + exact
+    * re-rank) the way production pays it. Everything cached is integer
+    * fixed point, so a cached read is bit-identical to a fresh
+    * computation — the oracle (which recomputes training inline)
+    * cannot tell the difference.
     */
-  private def fingerprint(spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-    s"${st.getLen}_${st.getModificationTime}"
-  }
-
   private def cachedIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       name: String)(build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    synchronized {
-      val path = s"${sys.props("java.io.tmpdir")}/graft_vecidx_${name}_${fingerprint(spark, dir)}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")))
-        build.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
-    }
+    spark.read.parquet(graft.Fixtures.cached(spark, dir, s"vecidx_$name", "embeddings") {
+      path => build.write.parquet(path)
+    })
 
   /** The quantized-corpus view every stage shares. */
   private def quantized(spark: org.apache.spark.sql.SparkSession,

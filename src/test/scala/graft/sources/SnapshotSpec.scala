@@ -74,6 +74,37 @@ class SnapshotSpec extends SparkSpec {
       Seq(("z", "p1", 1L, 99L)).toDF("key", "part", "seq", "vc")) == 2)
   }
 
+  test("two publishers racing on one version: exactly one wins, its manifest intact") {
+    // a real race, not a replay: both threads pass a barrier and then
+    // publish v1 of the same fresh store. A create-if-absent that can
+    // be overwritten shows up as two winners, or as the winner reading
+    // back the loser's manifest.
+    val fs = new org.apache.hadoop.fs.Path(freshBase())
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      (1 to 200).foreach { round =>
+        val base = freshBase()
+        val barrier = new java.util.concurrent.CyclicBarrier(2)
+        val attempts = Seq("a", "b").map { who =>
+          val dir = s"$base/data/v1-$who"
+          fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
+          who -> pool.submit(new java.util.concurrent.Callable[Boolean] {
+            def call(): Boolean = {
+              barrier.await()
+              try { SnapshotStore.publish(spark, base, 1, Map("p" -> who), dir); true }
+              catch { case _: SnapshotStore.CommitRaceException => false }
+            }
+          })
+        }
+        val winners = attempts.collect { case (who, f) if f.get() => who }
+        assert(winners.size == 1, s"round $round: winners $winners")
+        assert(SnapshotStore.readManifest(spark, base, 1) == Map("p" -> winners.head),
+          s"round $round: the winner's manifest was overwritten")
+      }
+    } finally pool.shutdown()
+  }
+
   test("commitWithRetry: the race loser rebases and converges to the serial history") {
     // deterministic race via the beforePublish seam: the loser has
     // written its attempt data for v2 when the winner publishes v2 in
