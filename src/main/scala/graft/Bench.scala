@@ -69,7 +69,7 @@ object Bench {
     val singleLap = sys.env.get("GRAFT_BENCH_LAPS").contains("1")
     val cold = lap(recordFailures = singleLap)
     val results = if (singleLap) cold else lap(recordFailures = true)
-    def json(rs: Seq[(String, Double)]): String =
+    def json(rs: Seq[(String, Any)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val coldTotal = if (cold.nonEmpty) cold.map(_._2).sum else 0.0
@@ -93,7 +93,7 @@ object Bench {
     val partial = only.nonEmpty || singleLap
     val heapMb = Runtime.getRuntime.maxMemory() / (1024L * 1024L)
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(results)},"failed":$failedJson,"sf":"$sfDir","lap1_total":$coldTotal,"lap1_queries":${json(cold)},"min_total":$minTotal,"min_queries":${json(minLap)},"setup_total":$setupTotal,"setup_sec":${json(setups)},"partial":$partial,"laps":${if (singleLap) 1 else 2},"cpus":"${Harness.cpus}","heap_max_mb":$heapMb}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(results)},"failed":$failedJson,"sf":"$sfDir","lap1_total":$coldTotal,"lap1_queries":${json(cold)},"min_total":$minTotal,"min_queries":${json(minLap)},"setup_total":$setupTotal,"setup_sec":${json(setups)},"setup_built":${json(setupRuns.map(r => r.name -> r.built))},"partial":$partial,"laps":${if (singleLap) 1 else 2},"cpus":"${Harness.cpus}","heap_max_mb":$heapMb}"""
     // r19 measurement-contract fix (OPTIMIZATION_r19.md §bench-line):
     // at 357 queries the full line above is ~25 KB — four per-query
     // maps — and a launcher that keeps only a bounded tail of stdout

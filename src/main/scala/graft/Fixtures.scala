@@ -46,6 +46,11 @@ object Fixtures {
     stamp(code.getFileSystem(new Configuration()), code)
   }
 
+  private val buildCount = new java.util.concurrent.atomic.AtomicLong
+
+  /** How many fixtures this JVM has built (not reused) so far. */
+  def builds: Long = buildCount.get
+
   /** The fixture directory for (`dir`, `tag`, `sources`), running
     * `build` on it first unless a completed build is already there.
     * Calls are serialized on one reentrant lock, so a `build` may
@@ -68,6 +73,7 @@ object Fixtures {
     val out = new Path(root, "fixture").toString
     if (!fs.exists(done)) {
       fs.delete(root, true)
+      buildCount.incrementAndGet()
       build(out)
       fs.create(done, true).close()
     }

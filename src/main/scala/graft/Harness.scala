@@ -50,8 +50,12 @@ object Harness {
   /** The offline mains' session, at [[cpus]]. */
   def session(): SparkSession = start(builder(cpus))
 
-  /** One fixture set-up's outcome: wall seconds, and what it threw. */
-  final case class SetupRun(name: String, seconds: Double, failure: Option[Throwable])
+  /** One fixture set-up's outcome: wall seconds, what it threw, and
+    * whether it built any [[Fixtures.cached]] fixture (rather than
+    * reusing every one it asked for).
+    */
+  final case class SetupRun(name: String, seconds: Double, failure: Option[Throwable],
+      built: Boolean)
 
   /** Run `setups` against `dir` in name order, timing each one. A
     * failing set-up is reported on stderr and returned, not thrown, so
@@ -60,12 +64,13 @@ object Harness {
   def runSetups(spark: SparkSession, dir: String,
       setups: Iterable[(String, (SparkSession, String) => Unit)]): Seq[SetupRun] =
     setups.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val builds = Fixtures.builds
       val t0 = System.nanoTime()
       val failure =
         try { fn(spark, dir); None }
         catch { case e: Throwable => Some(e) }
       val seconds = (System.nanoTime() - t0) / 1e9
       failure.foreach(e => System.err.println(s"[harness] setup $name failed: ${e.getMessage}"))
-      SetupRun(name, seconds, failure)
+      SetupRun(name, seconds, failure, built = Fixtures.builds != builds)
     }
 }

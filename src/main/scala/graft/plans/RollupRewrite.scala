@@ -6,35 +6,37 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.functions.{coalesce, col, lit, max, min, sum, when}
+import org.apache.spark.sql.types.TimestampType
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.tick.{GroupUnit, Rollup, TickStore}
+import graft.tick.{GroupSpec, GroupUnit, Rollup, TickQuery, TickQueryExec, TickStore}
 
-/** Tier-3 pyramid routing (SURVEY §4.1): an optimizer rule that answers
-  * eligible RAW-SQL aggregates from the materialized rollup tables,
-  * the same rewrite the TickQuery front-end's router does for JSON
-  * queries — but for users who bypass the front-end entirely and
-  * `spark.sql(...)` against a registered store view.
+/** Tier-3 pyramid routing (SURVEY §4.1): the SQL front end of the one
+  * rollup router, [[Rollup.route]]. An optimizer rule recognizes an
+  * aggregate over a registered store view, lowers it to a
+  * [[TickQuery]] and lets the router answer it from the rollup tables
+  * — for users who `spark.sql(...)` against the points directly.
   *
   * Matched shape (everything else is left untouched):
   *
   * {{{
-  * SELECT date_trunc('<level>', ts) AS b,
+  * SELECT date_trunc('<unit>', ts) AS b,
   *        sum|min|max|count|avg(value['f']) ...
   * FROM <registered points view>
-  * [WHERE index = '<lit>']
+  * WHERE index = '<lit>'
+  *   [AND ts >= TIMESTAMP '<from>'] [AND ts < TIMESTAMP '<to>']
   * GROUP BY 1
   * }}}
   *
-  * where `<level>` is a rollup level (minute/hour/day/month/year). The
-  * rewrite reads `<db>/rollup/<level>` — a few rows per bucket —
-  * instead of re-scanning raw points: the reference pyramid's
-  * read-amplification win (`cursor.go:269-352`), applied to SQL text
-  * the engine never saw coming.
+  * The router routes it when `<unit>` is a rollup level
+  * (minute/hour/day/month/year), the bounds sit on that unit's grid,
+  * the db is materialized and the session time zone is UTC; the plan
+  * then reads `<db>/rollup/<unit>` — a few rows per bucket — instead
+  * of the raw points (`cursor.go:269-352`). DataFrame-API aggregates of
+  * the same shape over the store's relation route too.
   *
   * Semantics note: rollup sums accumulate in DECIMAL (exact), so a
   * rewritten sum/avg is the order-independent value — inside the
@@ -68,24 +70,15 @@ object RollupRewrite {
 
   private[plans] def lookup(paths: Seq[Path]): Option[(TickStore, String)] =
     paths.headOption.flatMap(p => registry.get(norm(p.toString)))
-
-  private[plans] val levels: Map[String, GroupUnit] =
-    Rollup.levels.map(u => u.name -> u).toMap
 }
 
-class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
+class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
 
   import RollupRewrite._
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case agg: Aggregate => rewrite(agg).getOrElse(agg)
   }
-
-  /** What an agg output column needs from the rollup rows. */
-  private sealed trait Out
-  private case object BucketOut extends Out
-  private final case class StatOut(stat: String, field: String) extends Out
-  private final case class AvgOut(field: String) extends Out
 
   private def rewrite(agg: Aggregate): Option[LogicalPlan] = {
     // ---- collapse Project/Filter down to the relation ----
@@ -100,7 +93,7 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           subst ++= list.collect { case a: Alias => a.exprId -> a.child }
           node = child
         case Filter(cond, child) =>
-          filters ++= splitConjunction(cond); node = child
+          filters ++= splitConjunctivePredicates(cond); node = child
         case _ => return None
       }
     }
@@ -122,87 +115,75 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       cur
     }
 
-    // ---- grouping: exactly date_trunc(<rollup level>, <canonical ts>) ----
-    val unit = agg.groupingExpressions match {
+    // ---- grouping: exactly date_trunc(<group unit>, <canonical ts>) ----
+    val (bucket, unit) = agg.groupingExpressions match {
       case Seq(g) => resolve(g) match {
-        case TruncTimestamp(Literal(fmt: UTF8String, _), ts, _)
-            if levels.contains(fmt.toString.toLowerCase) && isCanonicalTs(ts) =>
-          levels(fmt.toString.toLowerCase)
+        case t @ TruncTimestamp(Literal(fmt: UTF8String, _), ts, _) if isCanonicalTs(ts) =>
+          (t, GroupUnit.forName(fmt.toString.toLowerCase).getOrElse(return None))
         case _ => return None
       }
       case _ => return None
     }
-    if (!Rollup.levelExists(spark, store, db, unit)) return None
 
-    // ---- filters: at most ONE `index = <lit>` (+ its null guard);
+    // ---- filters: ONE `index = <lit>`, optional `ts >= <lit>` and
+    // `ts < <lit>`, and the null guards the optimizer infers from them;
     // conflicting equalities (`index='a' AND index='b'`) are left to
     // the raw path, which correctly returns nothing ----
     val indexVals = scala.collection.mutable.Set.empty[String]
+    var from, to = Option.empty[java.time.Instant]
+    var tsGuard = false
+    def instant(us: Long) = java.time.Instant.EPOCH.plus(us, java.time.temporal.ChronoUnit.MICROS)
     filters.map(resolve).foreach {
       case IsNotNull(a: AttributeReference) if a.name == "index" => ()
+      case IsNotNull(a: AttributeReference) if a.name == "ts_ns" => tsGuard = true
+      case IsNotNull(ts) if isCanonicalTs(ts) => tsGuard = true
       case EqualTo(a: AttributeReference, Literal(v: UTF8String, _)) if a.name == "index" =>
         indexVals += v.toString
       case EqualTo(Literal(v: UTF8String, _), a: AttributeReference) if a.name == "index" =>
         indexVals += v.toString
+      case GreaterThanOrEqual(ts, Literal(us: Long, TimestampType))
+          if isCanonicalTs(ts) && from.isEmpty => from = Some(instant(us))
+      case LessThan(ts, Literal(us: Long, TimestampType))
+          if isCanonicalTs(ts) && to.isEmpty => to = Some(instant(us))
       case _ => return None
     }
-    if (indexVals.size > 1) return None
-    val indexVal: Option[String] = indexVals.headOption
+    // a bare `ts IS NOT NULL` is a filter of its own, not a range's guard
+    if (indexVals.size != 1 || (tsGuard && from.isEmpty && to.isEmpty)) return None
 
     // ---- outputs: the bucket, plus supported aggs over value['f'] ----
-    val groupResolved = resolve(agg.groupingExpressions.head)
-    val outs: Seq[Out] = agg.aggregateExpressions.map { ne =>
+    val outs: Seq[Option[(String, String)]] = agg.aggregateExpressions.map { ne =>
       val e = ne match { case a: Alias => a.child; case o => o }
-      if (resolve(e).semanticEquals(groupResolved)) BucketOut
+      if (resolve(e).semanticEquals(bucket)) None
       else e match {
         case ae: AggregateExpression if !ae.isDistinct && ae.filter.isEmpty =>
-          ae.aggregateFunction match {
-            case Sum(c, _)   => fieldOf(resolve(c)).map(StatOut("sum", _)).getOrElse(return None)
-            case Min(c)      => fieldOf(resolve(c)).map(StatOut("min", _)).getOrElse(return None)
-            case Max(c)      => fieldOf(resolve(c)).map(StatOut("max", _)).getOrElse(return None)
-            case Count(Seq(c)) => fieldOf(resolve(c)).map(StatOut("count", _)).getOrElse(return None)
-            case Average(c, _) => fieldOf(resolve(c)).map(AvgOut(_)).getOrElse(return None)
+          val (c, reducer) = ae.aggregateFunction match {
+            case Sum(c, _)     => (c, "sum")
+            case Min(c)        => (c, "min")
+            case Max(c)        => (c, "max")
+            case Count(Seq(c)) => (c, "count")
+            case Average(c, _) => (c, "avg")
             case _ => return None
           }
+          Some(fieldOf(resolve(c)).getOrElse(return None) -> reducer)
         case _ => return None
       }
     }
-
-    // ---- build the replacement over the rollup table ----
-    val roll0 = Rollup.read(spark, store, db, unit)
-    val roll1 = indexVal.map(v => roll0.where(col("index") === v)).getOrElse(roll0)
-    val needed = Seq("bucket", "field") ++ outs.collect {
-      case StatOut(s, _) => Seq(s)
-      case AvgOut(_)     => Seq("sum", "count")
-    }.flatten.distinct
     // grouping-only shapes (SELECT DISTINCT bucket) have nothing to
     // answer from the stats — leave them to the raw path
-    if (!outs.exists(_ != BucketOut)) return None
-    val aggCols = outs.zipWithIndex.collect {
-      case (StatOut("sum", f), i) =>
-        sum(when(col("field") === f, col("sum"))).cast("double").as(s"__a$i")
-      case (StatOut("min", f), i) => min(when(col("field") === f, col("min"))).as(s"__a$i")
-      case (StatOut("max", f), i) => max(when(col("field") === f, col("max"))).as(s"__a$i")
-      case (StatOut("count", f), i) =>
-        coalesce(sum(when(col("field") === f, col("count"))), lit(0L)).as(s"__a$i")
-      case (AvgOut(f), i) =>
-        (sum(when(col("field") === f, col("sum"))).cast("double") /
-          sum(when(col("field") === f, col("count"))).cast("double")).as(s"__a$i")
-    }
-    val grouped = roll1
-      .select(needed.map(col): _*)
-      .groupBy(col("bucket").as("__bucket"))
-      .agg(aggCols.head, aggCols.tail: _*)
-    val ordered = grouped.select(outs.zipWithIndex.map {
-      case (BucketOut, _) => col("__bucket")
-      case (_, i)         => col(s"__a$i")
-    }: _*)
-    val newPlan = ordered.queryExecution.analyzed
-    // graft the original output attr ids onto the rollup-read plan
-    Some(Project(
-      agg.aggregateExpressions.zip(newPlan.output).map { case (orig, attr) =>
-        Alias(attr, orig.name)(exprId = orig.exprId)
-      }, newPlan))
+    val fields = outs.flatten.distinct
+    if (fields.isEmpty) return None
+
+    // ---- route, and graft the original output attr ids onto its plan ----
+    val q = TickQuery(indexVals.head, from, to, Some(GroupSpec(1, unit)), fields)
+    val routed = Rollup.route(spark, store, db, q).getOrElse(return None)
+      .queryExecution.analyzed match {
+        case s: Sort => s.child // SQL orders only by its own ORDER BY
+        case p => p
+      }
+    Some(Project(agg.aggregateExpressions.zip(outs).map { case (orig, out) =>
+      val name = out.fold("bucket") { case (f, r) => TickQueryExec.outName(f, r) }
+      Alias(routed.output.find(_.name == name).get, orig.name)(exprId = orig.exprId)
+    }, routed))
   }
 
   /** The store view's event-time: the raw `ts` attribute or its
@@ -210,34 +191,17 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     */
   private def isCanonicalTs(e: Expression): Boolean = e match {
     case a: AttributeReference => a.name == "ts"
-    case mt: MicrosToTimestamp => mt.child match {
-      case d: IntegralDivide =>
-        (d.left match {
-          case a: AttributeReference => a.name == "ts_ns"
-          case _ => false
-        }) && d.right.foldable && Seq[Any](1000, 1000L).contains(d.right.eval())
-      case _ => false
-    }
+    case MicrosToTimestamp(IntegralDivide(a: AttributeReference, d, _)) =>
+      a.name == "ts_ns" && d.foldable && Seq[Any](1000, 1000L).contains(d.eval())
     case _ => false
   }
 
   /** value['f'] / element_at(value, 'f') over the store's map column. */
   private def fieldOf(e: Expression): Option[String] = e match {
-    case ea: ElementAt => (ea.left, ea.right) match {
-      case (a: AttributeReference, Literal(f: UTF8String, _)) if a.name == "value" =>
-        Some(f.toString)
-      case _ => None
-    }
-    case gm: GetMapValue => (gm.child, gm.key) match {
-      case (a: AttributeReference, Literal(f: UTF8String, _)) if a.name == "value" =>
-        Some(f.toString)
-      case _ => None
-    }
+    case ElementAt(a: AttributeReference, Literal(f: UTF8String, _), _, _) if a.name == "value" =>
+      Some(f.toString)
+    case GetMapValue(a: AttributeReference, Literal(f: UTF8String, _)) if a.name == "value" =>
+      Some(f.toString)
     case _ => None
-  }
-
-  private def splitConjunction(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjunction(l) ++ splitConjunction(r)
-    case o => Seq(o)
   }
 }

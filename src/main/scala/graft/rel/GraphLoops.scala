@@ -112,14 +112,15 @@ object GraphLoops {
       case CoPartitioned => hashPin(edges, joinKey)
     }
 
-  /** Inner-join O(nodes) `state` onto pinned `edges` without moving the
-    * edges: broadcast hint or shuffle-hash build side per strategy.
+  /** Join O(nodes) `state` onto pinned `edges` (inner, or `joinType`
+    * with `state` as the build side) without moving the edges:
+    * broadcast hint or shuffle-hash build side per strategy.
     */
   def stateJoin(edges: DataFrame, state: DataFrame, cond: Column,
-                strategy: Strategy): DataFrame =
+                strategy: Strategy, joinType: String = "inner"): DataFrame =
     strategy match {
-      case Broadcast => edges.join(broadcast(state), cond)
-      case CoPartitioned => edges.join(state.hint("shuffle_hash"), cond)
+      case Broadcast => edges.join(broadcast(state), cond, joinType)
+      case CoPartitioned => edges.join(state.hint("shuffle_hash"), cond, joinType)
     }
 
   /** Anti-join two node-sized relations (both O(nodes) — the hint just

@@ -91,17 +91,18 @@ object PageRank {
           // r19 fold (guide §2.4/§2.6): the previous rank rides the
           // probe's own materialization (one node-sized broadcast
           // join inside the same pin job), so the changed-check is a
-          // bare scan of the already-materialized blocks — the
-          // separate probe-vs-pinned join job is gone. Comparison
-          // semantics are unchanged: the old check inner-joined the
-          // same two vectors; r0 is node-matched old rank.
+          // bare scan of the already-materialized blocks. r0 is the
+          // node-matched old rank, null for a node new to the set; a
+          // node that left the set (an edge list that is not
+          // symmetric) is missing from the probe, which the size
+          // check catches once every rank matched.
           val old = pinned.select(col("node").as("node0"), col("r").as("r0"))
           val probe = GraphLoops.stateJoin(step(undDeg, pinned, strategy),
-              old, col("node") === col("node0"), strategy)
+              old, col("node") === col("node0"), strategy, "left_outer")
             .select(col("node"), col("r"), col("r0"))
             .pinned
-          val changed = probe.where(col("r") =!= col("r0"))
-            .limit(1).count() > 0
+          val changed = probe.where(!(col("r") <=> col("r0"))).limit(1).count() > 0 ||
+            probe.count() != pinned.count()
           if (!changed) { converged = true; pr = pinned }
           else { it += 1; pr = probe.select("node", "r") }
         }

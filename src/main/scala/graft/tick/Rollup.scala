@@ -3,6 +3,7 @@ import graft.Pinned
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -229,14 +230,11 @@ object Rollup {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], levelSchema(level))
   }
 
-  /** Does `level`'s directory exist for `db`? */
-  def levelExists(spark: SparkSession, store: TickStore, db: String, level: GroupUnit): Boolean = {
-    val p = levelPath(store, db, level)
+  /** Is the rollup tier of `db` materialized? */
+  private def exists(spark: SparkSession, store: TickStore, db: String): Boolean = {
+    val p = levelPath(store, db, levels.head)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
-
-  def exists(spark: SparkSession, store: TickStore, db: String): Boolean =
-    levelExists(spark, store, db, levels.head)
 
   /** Can `q` be answered from the rollup tier? Requires: a group level
     * at or coarser than a rollup level whose buckets nest inside the
@@ -260,15 +258,18 @@ object Rollup {
     }
   }
 
-  /** Answer a tick query from the rollup tier (caller must have checked
-    * [[routable]]). Reads the rollup at the query's own unit and
-    * re-merges multiplier buckets.
+  /** The one rollup router, behind both front ends ([[TickStore.query]]
+    * and the SQL rule [[graft.plans.RollupRewriteRule]]): `q` answered
+    * from the rollup at its own unit, multiplier buckets re-merged, or
+    * `None` for the raw points. It routes when `q` requests fields, is
+    * [[routable]] and the db is materialized, in a UTC session only: the
+    * rollup buckets are UTC, `date_trunc` truncates in the session zone.
     */
-  def query(spark: SparkSession, store: TickStore, db: String, q: TickQuery): DataFrame = {
-    require(q.fields.nonEmpty,
-      "tick query must request at least one field (empty \"fields\" document)")
-    val unit = routable(q).getOrElse(
-      throw new IllegalArgumentException(s"query not routable through rollups: $q"))
+  def route(spark: SparkSession, store: TickStore, db: String, q: TickQuery): Option[DataFrame] = {
+    val utc = DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+      .normalized == java.time.ZoneOffset.UTC
+    val unit = routable(q).filter(_ => q.fields.nonEmpty && utc && exists(spark, store, db))
+      .getOrElse(return None)
     val spec = q.group.get
     val base = read(spark, store, db, unit)
       .where(col("index") === q.index)
@@ -296,10 +297,10 @@ object Rollup {
       }
       c.as(TickQueryExec.outName(f, red))
     }
-    ranged
+    Some(ranged
       // re-bucket (multiplier > 1 merges several rollup buckets into one)
       .groupBy(spec.bucket(col("bucket")).as("bucket"))
       .agg(aggCols.head, aggCols.tail: _*)
-      .orderBy("bucket")
+      .orderBy("bucket"))
   }
 }

@@ -147,21 +147,18 @@ final class TickStore(val root: String) {
   }
 
   /** Run an analytical tick query against this store (reference A8).
-    * When the rollup tier is materialized and the query is routable
-    * (grouped at minute-or-coarser on an aligned range), it is answered
-    * from the rollups — the reference's read-from-the-pyramid path
-    * (`cursor.go:269-352`); otherwise from the raw points.
+    * The one rollup router, [[Rollup.route]], answers it from the
+    * rollups when it can — the reference's read-from-the-pyramid path
+    * (`cursor.go:269-352`); otherwise, or with `useRollups = false`,
+    * the raw points answer it.
     */
   def query(
       spark: SparkSession, db: String, q: TickQuery,
-      exact: Boolean = false, useRollups: Boolean = true): DataFrame = {
-    if (useRollups && Rollup.routable(q).isDefined && Rollup.exists(spark, this, db))
-      Rollup.query(spark, this, db, q)
-    else {
+      exact: Boolean = false, useRollups: Boolean = true): DataFrame =
+    (if (useRollups) Rollup.route(spark, this, db, q) else None).getOrElse {
       val src = StoreSource(this, spark, db)
       if (exact) TickQueryExec.runExact(src, q) else TickQueryExec.run(src, q)
     }
-  }
 
   // ---- ingest / upsert (reference A6) ----
 

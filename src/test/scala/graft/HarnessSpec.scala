@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Pins the offline mains' shared harness: set-up failures come back
-  * to the caller (Bench records them as `setup:<name>`), and the
-  * parallelism rule for `SPARK_GRAFT_CPUS`. Neither test runs a job.
+  * to the caller (Bench records them as `setup:<name>`), whether a
+  * set-up built its fixture (Bench's `setup_built`), and the
+  * parallelism rule for `SPARK_GRAFT_CPUS`. No test runs a job.
   */
 class HarnessSpec extends SparkSpec {
 
@@ -18,6 +19,18 @@ class HarnessSpec extends SparkSpec {
     assert(runs.forall(_.seconds >= 0.02), s"untimed setup: $runs")
     assert(runs.head.failure.isEmpty)
     assert(runs(1).failure.map(_.getMessage).contains("boom"))
+  }
+
+  test("runSetups records whether each setup built a fixture or reused it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_harness_spec")
+    java.nio.file.Files.write(dir.resolve("t.parquet"), Array[Byte](1, 2, 3))
+    val setup = "fixture" -> { (s: SparkSession, d: String) =>
+      Fixtures.cached(s, d, "harness_spec", "t")(_ => ()); () }
+    val plain = "plain" -> { (_: SparkSession, _: String) => () }
+    val first = Harness.runSetups(spark, dir.toString, Seq(setup, plain))
+    assert(first.map(r => r.name -> r.built) == Seq("fixture" -> true, "plain" -> false))
+    val again = Harness.runSetups(spark, dir.toString, Seq(setup))
+    assert(again.map(r => r.name -> r.built) == Seq("fixture" -> false))
   }
 
   test("SPARK_GRAFT_CPUS must be a positive integer; unset means all processors") {

@@ -3,11 +3,12 @@ package graft.plans
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.tick.{Rollup, TickStore}
+import graft.tick.{Rollup, TickIngestRecord, TickStore}
 
 /** SQL-over-rollup routing: a raw spark.sql aggregate on the points
   * view must silently read the rollup table (plan check) and return
-  * the same answer as the un-rewritten aggregation (value check).
+  * the same answer as the un-rewritten aggregation (value check) —
+  * and keep reading points whenever the router declines.
   */
 class RollupRewriteSpec extends SparkSpec {
 
@@ -71,6 +72,65 @@ class RollupRewriteSpec extends SparkSpec {
       assert(r.getLong(4) == d.getLong(4))
       assert(math.abs(r.getDouble(5) - d.getDouble(5)) < 1e-9)
     }
+  }
+
+  /** A registered, materialized store of three `ix` points (1.0 at
+    * 2024-03-01T02:00Z, 10.0 at 20:00Z, 100.0 at 2024-03-02T03:00Z),
+    * viewed as `<name>_pts`.
+    */
+  private def small(name: String): Unit = {
+    val root = s"${sys.props("java.io.tmpdir")}/graft_test_sqlrew_$name"
+    val p = new org.apache.hadoop.fs.Path(root)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val s = new TickStore(root)
+    s.createDb(spark, "db")
+    s.ingestRecords(spark, "db", Seq(
+      "2024-03-01T02:00:00Z" -> 1.0, "2024-03-01T20:00:00Z" -> 10.0,
+      "2024-03-02T03:00:00Z" -> 100.0).map { case (t, v) => TickIngestRecord("ix", t, Map("v" -> v)) })
+    Rollup.materialize(spark, s, "db")
+    RollupRewrite.register(spark, s, "db")
+    s.read(spark, "db").createOrReplaceTempView(s"${name}_pts")
+  }
+
+  private def scans(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
+
+  private def buckets(df: org.apache.spark.sql.DataFrame): Seq[(String, Double)] =
+    df.collect().map(r => r.getTimestamp(0).toInstant.toString -> r.getDouble(1)).toSeq
+
+  test("an aligned range routes; an unaligned range and an index-less aggregate read points") {
+    small("range")
+    def sql(where: String) = spark.sql(
+      s"""SELECT date_trunc('hour', ts) AS b, sum(value['v']) AS s
+         |FROM range_pts WHERE $where GROUP BY 1 ORDER BY 1""".stripMargin)
+    val aligned = sql("index = 'ix' AND ts >= TIMESTAMP '2024-03-01 02:00:00' " +
+      "AND ts < TIMESTAMP '2024-03-02 03:00:00'")
+    assert(scans(aligned).contains("rollup/hour") && !scans(aligned).contains("points"),
+      scans(aligned))
+    assert(buckets(aligned) == Seq("2024-03-01T02:00:00Z" -> 1.0, "2024-03-01T20:00:00Z" -> 10.0))
+    val unaligned = sql("index = 'ix' AND ts >= TIMESTAMP '2024-03-01 02:00:00' " +
+      "AND ts < TIMESTAMP '2024-03-02 03:00:00.000001'")
+    assert(scans(unaligned).contains("points") && !scans(unaligned).contains("rollup"),
+      scans(unaligned))
+    assert(buckets(unaligned).map(_._2) == Seq(1.0, 10.0, 100.0))
+    val indexless = sql("ts >= TIMESTAMP '2024-03-01 00:00:00'")
+    assert(scans(indexless).contains("points") && !scans(indexless).contains("rollup"),
+      scans(indexless))
+    assert(buckets(indexless).map(_._2) == Seq(1.0, 10.0, 100.0))
+  }
+
+  test("a non-UTC session is not routed: date_trunc truncates in the session zone") {
+    small("tz")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try {
+      val df = spark.sql(
+        """SELECT date_trunc('day', ts) AS b, sum(value['v']) AS s
+          |FROM tz_pts WHERE index = 'ix' GROUP BY 1 ORDER BY 1""".stripMargin)
+      assert(!scans(df).contains("rollup"), scans(df))
+      // Kolkata days start at 18:30Z; the UTC rollup days would give
+      // 03-01 -> 11.0 and 03-02 -> 100.0
+      assert(buckets(df) == Seq("2024-02-29T18:30:00Z" -> 1.0, "2024-03-01T18:30:00Z" -> 110.0))
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
   }
 
   test("ineligible shapes are left untouched") {

@@ -48,6 +48,28 @@ class R6OpsSpec extends SparkSpec {
     assert(got == r, s"capped run must equal the sequential recurrence: $got vs $r")
   }
 
+  test("a probe on a changing node set never triggers a false early exit") {
+    // a chain 1 -> 2 -> 3 -> 4 is not symmetric: each step drops the
+    // source end (no in-edge) and adds the sink (no out-edge), while
+    // every rank that survives stays at the unit. Comparing only the
+    // nodes both vectors hold would stop after one round; the loop must
+    // instead end on the vector the full cap computes (it empties)
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L))
+    Seq(GraphLoops.Broadcast, GraphLoops.CoPartitioned).foreach { strategy =>
+      val (pr, it) = PageRank.run(chain.toDF("u", "v"), maxIter = 10, checkEvery = 1,
+        strategy = strategy)
+      val deg = chain.groupBy(_._1).map { case (n, es) => n -> es.length.toLong }
+      var r = deg.keys.map(_ -> 1000000000000L).toMap
+      (1 to 10).foreach { _ =>
+        r = chain.filter(e => r.contains(e._1)).groupBy(_._2).map { case (v, es) =>
+          v -> (150000000000L + 85 * es.map { case (u, _) => r(u) / deg(u) }.sum / 100)
+        }
+      }
+      val got = pr.collect().map(x => (x.getLong(0), x.getLong(1))).toMap
+      assert(got == r, s"$strategy stopped at $it with $got, the cap gives $r")
+    }
+  }
+
   test("approximate profile tracks the exact profile within the HLL error bound") {
     val approx = graft.SparkEntry.queries("profile_columns_approx")(spark, sf001)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap

@@ -214,7 +214,7 @@ class TickStoreSpec extends SparkSpec {
       """{"index":"ix","group":"hour","fields":{"nope":{"reducer":"count"}}}""")
     val raw = s.query(spark, "db", q).collect()
     Rollup.materialize(spark, s, "db")
-    val routed = Rollup.query(spark, s, "db", q).collect()
+    val routed = Rollup.route(spark, s, "db", q).get.collect()
     assert(raw.map(_.getLong(1)).toSeq == Seq(0L))
     assert(routed.map(_.getLong(1)).toSeq == Seq(0L))
   }
